@@ -204,12 +204,9 @@ final class RClipEngine(
     * [[reload]] like every other engine cache. */
   def search(q: String, num: Int = 12): DataFrame =
     resolver.resolve(q) match {
-      case None => spark.emptyDataFrame
-          .withColumn("id", lit(null).cast("long"))
-          .withColumn("score", lit(null).cast("double"))
-          .limit(0)
+      case None => noHits
       case Some(v) => fastIndex() match {
-        case Some(idx) => fastTopK(idx, v, num)
+        case Some(idx) => fastScore(idx, v, num).toSeq.toDF("id", "score")
         case None => annIndex() match {
           case Some(ix) => annTopK(ix, v, num)
           case None => scoreTopK(activeDf, v, num)
@@ -246,12 +243,15 @@ final class RClipEngine(
     * `search()` bit-for-bit (EngineSpec pins fast ≡ distributed). */
   def searchExact(q: String, num: Int = 12): DataFrame =
     resolver.resolve(q) match {
-      case None => spark.emptyDataFrame
-          .withColumn("id", lit(null).cast("long"))
-          .withColumn("score", lit(null).cast("double"))
-          .limit(0)
+      case None => noHits
       case Some(v) => scoreTopK(activeDf, v, num)
     }
+
+  /** The empty (id, score) result of a query that resolves to nothing. */
+  private lazy val noHits: DataFrame = spark.emptyDataFrame
+    .withColumn("id", lit(null).cast("long"))
+    .withColumn("score", lit(null).cast("double"))
+    .limit(0)
 
   private def scoreTopK(df: DataFrame, v: Array[Float], k: Int): DataFrame =
     df.select(col(idCol).as("id"),
@@ -301,31 +301,19 @@ final class RClipEngine(
       }
   }
 
-  /** Driver-side twin of [[scoreTopK]]: identical arithmetic (index-order
-    * Double dot over min-length = vec_dot; HALF_UP round at 4 dp =
-    * Spark's `round`) and identical (score DESC, id ASC) tie order, so
-    * the two paths are indistinguishable to a caller. */
+  /** Driver-side twin of [[scoreTopK]]: identical arithmetic
+    * ([[VectorOps.vecDot]] = vec_dot; [[VectorOps.round4]] = Spark's
+    * `round`) and the identical (score DESC, id ASC) cut, taken by the
+    * shared k-bounded selector [[TopK.byRoundedScore]] on the ROUNDED
+    * score — a row below the k-th kept raw score can tie it after
+    * rounding and win on its lower id — so the two paths are
+    * indistinguishable to a caller. */
   private def fastScore(idx: RClipEngine.FastIndex,
       v: Array[Float], k: Int): Array[(Long, Double)] = {
-    val n = idx.ids.length
-    val scored = new Array[(Long, Double)](n)
-    var r = 0
-    while (r < n) {
-      val e = idx.vecs(r)
-      val m = math.min(e.length, v.length)
-      var s = 0.0
-      var i = 0
-      while (i < m) { s += e(i).toDouble * v(i).toDouble; i += 1 }
-      scored(r) = (idx.ids(r), java.math.BigDecimal.valueOf(s)
-        .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue())
-      r += 1
-    }
-    scored.sortBy { case (id, sc) => (-sc, id) }.take(k)
+    val (rows, scores) = TopK.byRoundedScore(idx.ids.length, k,
+      r => VectorOps.vecDot(idx.vecs(r), v), (a, b) => idx.ids(a) < idx.ids(b))
+    Array.tabulate(rows.length)(i => (idx.ids(rows(i)), scores(i)))
   }
-
-  private def fastTopK(idx: RClipEngine.FastIndex,
-      v: Array[Float], k: Int): DataFrame =
-    fastScore(idx, v, k).toSeq.toDF("id", "score")
 
   /** The ABOVE-CAP ANN serving regime (VERDICT r07 next-#2): opt-in via
     * [[RClipEngine.AnnServing]]. The reference brute-forces every search
@@ -568,22 +556,17 @@ final class RClipEngine(
     * half, `rclip_server.py:395-402`): when the vocabulary-sized word
     * map is driver-resident (the [[wordMapMax]] regime — the reference's
     * own RAM word matrix, `rclip_server.py:306-308`), score it directly
-    * with the same index-order Double dot + HALF_UP 4-dp round and the
-    * same (score DESC, word ASC) cut; over the cap, collect the
-    * distributed ranking. EngineSpec pins map ≡ distributed. */
+    * with [[VectorOps.vecDot]] + [[VectorOps.round4]] and cut with the
+    * shared selector [[TopK.byRoundedScore]] on the rounded score, ties
+    * by [[RClipEngine.utf8Compare]] (Spark's word ASC); over the cap,
+    * collect the distributed ranking. EngineSpec pins map ≡ distributed. */
   def similarWordsRows(q: String, num: Int = 50): Seq[(String, Double)] =
     resolver.resolve(q) match {
       case None => Seq.empty
       case Some(v) => wordVectors match {
         case Some(m) =>
-          m.toSeq.map { case (w, vec) =>
-            val n = math.min(vec.length, v.length)
-            var s = 0.0
-            var i = 0
-            while (i < n) { s += vec(i).toDouble * v(i).toDouble; i += 1 }
-            (w, java.math.BigDecimal.valueOf(s)
-              .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue())
-          }.sorted(RClipEngine.byScoreDescUtf8Asc).take(num)
+          val (ws, vecs) = m.toArray.unzip
+          RClipEngine.topTexts(ws, num, r => VectorOps.vecDot(vecs(r), v))
         case None =>
           similarWords(q, num).as[(String, Double)].collect().toSeq
       }
@@ -597,7 +580,11 @@ final class RClipEngine(
     * to the distributed pipeline — the element-wise Double sums are
     * sums of float-widened values, exactly representable, so the
     * aggregate is addition-order-proof and the two paths agree bitwise
-    * (EngineSpec pins it). Over [[wordMapMax]]: distributed fallback. */
+    * (EngineSpec pins it). Both cuts go through the shared selector with
+    * [[RClipEngine.utf8Compare]] ties: the pool on the raw word score
+    * (best-first, since the seeded draw indexes it by rank) and the final
+    * cut on the rounded phrase score ([[TopK.byRoundedScore]]). Over
+    * [[wordMapMax]]: distributed fallback. */
   def similarPhrasesRows(q: String, num: Int = 50,
       combosPerLen: Int = 1000, topWords: Int = 200): Seq[(String, Double)] =
     resolver.resolve(q) match {
@@ -607,27 +594,13 @@ final class RClipEngine(
           similarPhrases(q, num, combosPerLen, topWords)
             .as[(String, Double)].collect().toSeq
         case Some(m) =>
-          def dot(e: Array[Float]): Double = {
-            val n = math.min(e.length, v.length)
-            var s = 0.0
-            var i = 0
-            while (i < n) { s += e(i).toDouble * v(i).toDouble; i += 1 }
-            s
-          }
           // pool: same raw (un-rounded) score ordering as the DataFrame
-          val pool = m.toSeq.map { case (w, vec) => (w, dot(vec)) }
-            .sorted(RClipEngine.byScoreDescUtf8Asc).take(topWords).map(_._1)
-          val rnd = new java.util.Random(seed)
-          def pick(n: Int): Seq[String] = {
-            val idx = scala.collection.mutable.LinkedHashSet.empty[Int]
-            while (idx.size < n && idx.size < pool.length)
-              idx += rnd.nextInt(pool.length)
-            idx.toSeq.map(pool)
-          }
-          val candidates = (2 to 4).flatMap { len =>
-            (1 to combosPerLen).map(_ => pick(len).mkString(" "))
-          }.distinct
-          candidates.flatMap { phrase =>
+          val (ws, wvs) = m.toArray.unzip
+          val top = new TopK(topWords, ws.length,
+            (a, b) => RClipEngine.utf8Compare(ws(a), ws(b)) < 0)
+          ws.indices.foreach(r => top.offer(VectorOps.vecDot(wvs(r), v), r))
+          val pool = top.drain()._1.map(ws)
+          val scored = phraseCandidates(pool, combosPerLen).flatMap { phrase =>
             val vecs = phrase.split(" ").flatMap(m.get)
             if (vecs.isEmpty) None // no known word: the join drops it too
             else {
@@ -638,11 +611,10 @@ final class RClipEngine(
                   sum(i) += e(i).toDouble; i += 1
                 }
               }
-              val unit = VectorOps.normalize(sum.map(_.toFloat))
-              Some((phrase, java.math.BigDecimal.valueOf(dot(unit))
-                .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()))
+              Some((phrase, VectorOps.vecDot(VectorOps.normalize(sum.map(_.toFloat)), v)))
             }
-          }.sorted(RClipEngine.byScoreDescUtf8Asc).take(num)
+          }.toArray
+          RClipEngine.topTexts(scored.map(_._1), num, r => scored(r)._2)
       }
     }
 
@@ -667,16 +639,7 @@ final class RClipEngine(
           .orderBy(col("wscore").desc, col("word").asc)
           .limit(topWords)
           .select("word").as[String].collect()
-        val rnd = new java.util.Random(seed)
-        def pick(n: Int): Seq[String] = {
-          // sample n distinct indices (reference uses random.sample :333)
-          val idx = scala.collection.mutable.LinkedHashSet.empty[Int]
-          while (idx.size < n && idx.size < pool.length) idx += rnd.nextInt(pool.length)
-          idx.toSeq.map(pool)
-        }
-        val candidates = (2 to 4).flatMap { len =>
-          (1 to combosPerLen).map(_ => pick(len).mkString(" "))
-        }.distinct
+        val candidates = phraseCandidates(pool, combosPerLen)
         if (exact) {
           // W2 exact: per-candidate re-encode in a distributed UDF (the
           // encoder port is Serializable — ship the base embedder, never
@@ -707,6 +670,19 @@ final class RClipEngine(
             .limit(num)
         }
     }
+
+  /** The seeded phrase draw over the ranked word `pool`: `combosPerLen`
+    * samples of 2, 3 and 4 distinct pool words each (the reference's
+    * `random.sample`, `rclip_server.py:333`), deduplicated. */
+  private def phraseCandidates(pool: Array[String], combosPerLen: Int): Seq[String] = {
+    val rnd = new java.util.Random(seed)
+    def pick(n: Int): Seq[String] = {
+      val idx = scala.collection.mutable.LinkedHashSet.empty[Int]
+      while (idx.size < n && idx.size < pool.length) idx += rnd.nextInt(pool.length)
+      idx.toSeq.map(pool)
+    }
+    (2 to 4).flatMap(len => (1 to combosPerLen).map(_ => pick(len).mkString(" "))).distinct
+  }
 
   // ---------------------------------------------------------------- stats
 
@@ -859,15 +835,15 @@ object RClipEngine {
     x.length - y.length
   }
 
-  /** (score DESC, text ASC-in-UTF-8-bytes) — the exact total order of
-    * the distributed `orderBy(col(score).desc, col(text).asc)`. */
-  private[engine] def byScoreDescUtf8Asc[A]: Ordering[(String, Double)] =
-    new Ordering[(String, Double)] {
-      def compare(p: (String, Double), q: (String, Double)): Int = {
-        val c = java.lang.Double.compare(q._2, p._2)
-        if (c != 0) c else utf8Compare(p._1, q._1)
-      }
-    }
+  /** Top-`k` (text, rounded score) rows by (round4(raw) DESC, text ASC
+    * in UTF-8 bytes) — the exact cut of the distributed
+    * `round(score, 4)` + `orderBy(col(score).desc, col(text).asc)`. */
+  private def topTexts(texts: Array[String], k: Int,
+      raw: Int => Double): Seq[(String, Double)] = {
+    val (rows, scores) = TopK.byRoundedScore(texts.length, k, raw,
+      (a, b) => utf8Compare(texts(a), texts(b)) < 0)
+    rows.indices.map(i => (texts(rows(i)), scores(i)))
+  }
 
   /** Default driver word-map bound: 2²⁰ words ≈ 300 MB of 64-dim fp32
     * entries as JVM map state — comfortably vocabulary-sized (the
@@ -949,69 +925,29 @@ object RClipEngine {
   final case class CodeIndex(ids: Array[Long], cells: Array[Int],
       codes: Array[Long])
 
-  /** The RAM coarse cut: scan the probed cells' codes, keep the top
-    * `coarseK` by (adc DESC, id ASC). Primitive arrays + a k-bounded
-    * binary MIN-heap (root = currently-worst kept row), so a request at
-    * the 2²⁴-row cap allocates O(coarseK) — no boxed tuples, no full
-    * sort of the scanned rows. Ordering is EXACTLY `searchAdc`'s
-    * (adc DESC, id ASC) including ties, so the cut stays bit-identical
-    * to the distributed coarse stage (EngineSpec pins it). Returns ids
-    * sorted ascending (set semantics feed an isin; order irrelevant,
-    * but determinism keeps plans stable). */
+  /** The RAM coarse cut: scan the probed cells' codes and keep the top
+    * `coarseK` by (raw adc DESC, id ASC) through the shared k-bounded
+    * selector [[TopK]], so a request at the 2²⁴-row cap allocates
+    * O(coarseK) — no boxed tuples, no full sort of the scanned rows.
+    * Ordering is EXACTLY `searchAdc`'s (adc DESC, id ASC) including
+    * ties (no rounding on this cut), so it stays bit-identical to the
+    * distributed coarse stage (EngineSpec pins it). Returns ids sorted
+    * ascending (set semantics feed an isin; order irrelevant, but
+    * determinism keeps plans stable). */
   private[engine] def ramCoarseCut(ci: CodeIndex, lut: Array[Double],
       m: Int, k: Int, probe: Seq[Int], coarseK: Int): Seq[Long] = {
     require(coarseK > 0, s"coarseK must be positive, got $coarseK")
     val maxCell = ci.cells.foldLeft(0)(math.max)
     val probedMask = new Array[Boolean](maxCell + 1)
     probe.foreach(c => if (c >= 0 && c <= maxCell) probedMask(c) = true)
-    val hS = new Array[Double](coarseK) // min-heap on (score ASC, id DESC)
-    val hI = new Array[Long](coarseK)
-    var size = 0
-    // `a` loses to `b` (a is WORSE-kept) iff a.s < b.s, or tie and a.id > b.id
-    def worse(sa: Double, ia: Long, sb: Double, ib: Long): Boolean =
-      sa < sb || (sa == sb && ia > ib)
-    def siftDown(at: Int): Unit = {
-      var i = at
-      var continue = true
-      while (continue) {
-        val l = 2 * i + 1; val r = l + 1
-        var worst = i
-        if (l < size && worse(hS(l), hI(l), hS(worst), hI(worst))) worst = l
-        if (r < size && worse(hS(r), hI(r), hS(worst), hI(worst))) worst = r
-        if (worst == i) continue = false
-        else {
-          val ts = hS(i); val ti = hI(i)
-          hS(i) = hS(worst); hI(i) = hI(worst)
-          hS(worst) = ts; hI(worst) = ti
-          i = worst
-        }
-      }
-    }
+    val top = new TopK(coarseK, ci.ids.length, (a, b) => ci.ids(a) < ci.ids(b))
     var row = 0
     while (row < ci.ids.length) {
-      val cell = ci.cells(row)
-      if (cell <= maxCell && probedMask(cell)) {
-        val s = graft.ann.PqIndex.adcPacked(ci.codes(row), lut, m, k)
-        val id = ci.ids(row)
-        if (size < coarseK) {
-          // insert + sift up
-          var i = size
-          hS(i) = s; hI(i) = id; size += 1
-          while (i > 0 && worse(hS(i), hI(i), hS((i - 1) / 2), hI((i - 1) / 2))) {
-            val parent = (i - 1) / 2
-            val ts = hS(i); val ti = hI(i)
-            hS(i) = hS(parent); hI(i) = hI(parent)
-            hS(parent) = ts; hI(parent) = ti
-            i = parent
-          }
-        } else if (worse(hS(0), hI(0), s, id)) {
-          hS(0) = s; hI(0) = id
-          siftDown(0)
-        }
-      }
+      if (probedMask(ci.cells(row)))
+        top.offer(graft.ann.PqIndex.adcPacked(ci.codes(row), lut, m, k), row)
       row += 1
     }
-    hI.take(size).sorted.toSeq
+    top.drain()._1.map(ci.ids).sorted.toSeq
   }
 
   sealed trait AnnState

@@ -71,6 +71,18 @@ final class RClipHttpServer(
   private def notFound(ex: HttpExchange): Unit =
     send(ex, 404, "not found".getBytes(UTF_8), "text/plain")
 
+  private def badRequest(ex: HttpExchange, msg: String): Unit =
+    send(ex, 400, msg.getBytes(UTF_8), "text/plain")
+
+  /** Query parameter `name` as an Int in [lo, hi], `default` when absent;
+    * None (answered 400, like the reference's typed `int`) otherwise. */
+  private def intParam(ps: Map[String, String], name: String, default: Int,
+      lo: Int, hi: Int): Option[Int] =
+    ps.get(name) match {
+      case None => Some(default)
+      case Some(s) => s.toIntOption.filter(n => n >= lo && n <= hi)
+    }
+
   private def handle(path: String)(f: HttpExchange => Unit): Unit =
     server.createContext(path, (ex: HttpExchange) =>
       try f(ex)
@@ -171,9 +183,13 @@ final class RClipHttpServer(
   handle("/search") { ex => html(ex, shellBody()) }
 
   handle("/search_api") { ex =>
+    // any non-negative Int: the engine's top-k is bounded by the live
+    // rows, so num = Int.MaxValue returns every row and allocates no more
     val ps = params(ex)
-    json(ex, searchPairs(ps.getOrElse("q", ""),
-      ps.get("num").flatMap(n => scala.util.Try(n.toInt).toOption).getOrElse(12)))
+    intParam(ps, "num", 12, 0, Int.MaxValue) match {
+      case Some(num) => json(ex, searchPairs(ps.getOrElse("q", ""), num))
+      case None => badRequest(ex, "num must be a non-negative integer")
+    }
   }
 
   handle("/similar_words") { ex =>
@@ -242,17 +258,20 @@ final class RClipHttpServer(
   }
 
   handle("/thm/") { ex =>
-    val size = params(ex).get("size")
-      .flatMap(s => scala.util.Try(s.toInt).toOption).getOrElse(400)
-    pathId(ex).flatMap(id => engine.thumbnail(id, size, fetcher, decoder)) match {
-      case Some(SvgPlaceholder(svg)) =>
-        send(ex, 200, svg.getBytes(UTF_8), "image/svg+xml",
-          Map("Cache-Control" -> "public, max-age=172800"))
-      case Some(RedirectUrl(url)) => redirect(ex, url)
-      case Some(ResizedBytes(bytes)) =>
-        send(ex, 200, bytes, "image/jpeg",
-          Map("Cache-Control" -> "public, max-age=172800"))
-      case None => notFound(ex)
+    intParam(params(ex), "size", 400, 1, RClipHttpServer.MaxThumbSize) match {
+      case None => badRequest(ex,
+        s"size must be an integer in [1, ${RClipHttpServer.MaxThumbSize}]")
+      case Some(size) =>
+        pathId(ex).flatMap(id => engine.thumbnail(id, size, fetcher, decoder)) match {
+          case Some(SvgPlaceholder(svg)) =>
+            send(ex, 200, svg.getBytes(UTF_8), "image/svg+xml",
+              Map("Cache-Control" -> "public, max-age=172800"))
+          case Some(RedirectUrl(url)) => redirect(ex, url)
+          case Some(ResizedBytes(bytes)) =>
+            send(ex, 200, bytes, "image/jpeg",
+              Map("Cache-Control" -> "public, max-age=172800"))
+          case None => notFound(ex)
+        }
     }
   }
 
@@ -273,4 +292,9 @@ final class RClipHttpServer(
 
   def start(): RClipHttpServer = { server.start(); this }
   def stop(): Unit = server.stop(0)
+}
+
+object RClipHttpServer {
+  /** Largest `/thm` size: a local resize allocates size × size·3/4 pixels. */
+  val MaxThumbSize: Int = 4096
 }

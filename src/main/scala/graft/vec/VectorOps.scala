@@ -34,6 +34,22 @@ object VectorOps {
     s
   }
 
+  /** The driver twin of the `vec_dot` expression: Double accumulation in
+    * index order over the shorter length, bit-identical to the scored
+    * scan's kernel. */
+  def vecDot(a: Array[Float], b: Array[Float]): Double = {
+    val n = math.min(a.length, b.length)
+    var s = 0.0; var i = 0
+    while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
+    s
+  }
+
+  /** Spark's `round(x, 4)` on a double: HALF_UP at 4 decimals of the
+    * shortest decimal representation. */
+  def round4(x: Double): Double =
+    java.math.BigDecimal.valueOf(x)
+      .setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
+
   def l2norm(a: Array[Float]): Double = {
     var s = 0.0; var i = 0
     while (i < a.length) { s += a(i).toDouble * a(i).toDouble; i += 1 }
@@ -87,29 +103,9 @@ object VectorOps {
     * ~2 KiB), not as a per-row literal. */
   def dotQuery(v: Column, q: Array[Float]): Column = {
     val f = udf { (arr: Array[Float]) =>
-      if (arr == null) null
-      else {
-        var s = 0.0; var i = 0
-        val n = math.min(arr.length, q.length)
-        while (i < n) { s += arr(i).toDouble * q(i).toDouble; i += 1 }
-        java.lang.Double.valueOf(s)
-      }
+      if (arr == null) null else java.lang.Double.valueOf(vecDot(arr, q))
     }
     f(v)
-  }
-
-  /** Dot product between two vector columns (near-dup joins). */
-  val dotCols: (Column, Column) => Column = {
-    val f = udf { (a: Array[Float], b: Array[Float]) =>
-      if (a == null || b == null) null
-      else {
-        var s = 0.0; var i = 0
-        val n = math.min(a.length, b.length)
-        while (i < n) { s += a(i).toDouble * b(i).toDouble; i += 1 }
-        java.lang.Double.valueOf(s)
-      }
-    }
-    (a: Column, b: Column) => f(a, b)
   }
 
   /** Cosine similarity between two vector columns (not assumed unit). */

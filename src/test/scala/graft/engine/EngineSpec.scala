@@ -78,6 +78,31 @@ class EngineSpec extends SparkSpec {
     val dist2 = new RClipEngine(spark, store, new DeterministicEmbedder(64),
       fastPathMaxRows = 0L)
     assert(rows(fast, "label5", 600) == rows(dist2, "label5", 600))
+    // planted near-tie: ids 1 and 2 score 0.49996 and 0.50004 raw (the
+    // higher raw score on the HIGHER id), both 0.5000 after the 4-dp
+    // HALF_UP round, so the rounded (score DESC, id ASC) cut keeps id 1 —
+    // a selector that cuts on the raw score keeps id 2 and fails here.
+    // Query e0 puts the tie at k = 1; e1 ranks ids 5, 6 above it, so the
+    // tie straddles the cut at k = 3.
+    import spark.implicits._
+    val plantedDir =
+      java.nio.file.Files.createTempDirectory("graft-engine-tie").toString
+    val planted = new SnapshotStore(plantedDir)
+    planted.write(Seq((1L, 0.49996f, 0.49996f), (2L, 0.50004f, 0.50004f),
+        (3L, 0.49f, 0.49f), (4L, 0.1f, 0.1f), (5L, 0.05f, 0.9f), (6L, 0.05f, 0.7f))
+      .map { case (id, x0, x1) =>
+        (id, Array.tabulate(64)(i => if (i == 0) x0 else if (i == 1) x1 else 0.05f), 0)
+      }.toDF("vec_id", "embedding", "label"))
+    val tieFast = new RClipEngine(spark, planted, new DeterministicEmbedder(64))
+    val tieDist = new RClipEngine(spark, planted, new DeterministicEmbedder(64),
+      fastPathMaxRows = 0L)
+    def basis(d: Int) = Array.tabulate(64)(i => if (i == d) 1 else 0)
+      .mkString("""{"clip_embedding":[""", ",", "]}")
+    for (d <- Seq(0, 1); k <- Seq(1, 3, 6))
+      assert(rows(tieFast, basis(d), k) == rows(tieDist, basis(d), k),
+        s"planted e$d k=$k")
+    assert(rows(tieFast, basis(0), 1) == Seq((1L, 0.5)))
+    assert(rows(tieFast, basis(1), 3).map(_._1) == Seq(5L, 6L, 1L))
   }
 
   test("Q11: empty query → empty result") {
@@ -617,8 +642,10 @@ class EngineSpec extends SparkSpec {
     "corpora included") {
     val rnd = new java.util.Random(7)
     val m = 4; val k = 16
-    val lut = Array.fill(m * k)(rnd.nextInt(5).toDouble) // coarse → many ties
-    for (n <- Seq(0, 1, 50, 500); coarseK <- Seq(1, 16, 500)) {
+    val coarseLut = Array.fill(m * k)(rnd.nextInt(5).toDouble) // many ties
+    val flatLut = Array.fill(m * k)(0.0) // all-equal scores: id order alone
+    for (lut <- Seq(coarseLut, flatLut); n <- Seq(0, 1, 50, 500);
+        coarseK <- Seq(1, 16, 500)) {
       val ids = Array.tabulate(n)(i => (n - i).toLong) // descending ids
       val cells = Array.tabulate(n)(_ => rnd.nextInt(8))
       val codes = Array.tabulate(n)(_ => rnd.nextLong() & 0xffffL)
@@ -633,6 +660,19 @@ class EngineSpec extends SparkSpec {
         .take(coarseK).map(_._2).sorted
       assert(got == want, s"n=$n coarseK=$coarseK")
     }
+    // the same shared selector at k = 0, k > n, all-equal scores and the
+    // supplementary-plane word tie (Spark's UTF-8 byte order, not UTF-16)
+    val words = Array("～", new String(Character.toChars(0x1D11E)), "b", "a")
+    val utf8Before = (a: Int, b: Int) => RClipEngine.utf8Compare(words(a), words(b)) < 0
+    for (flat <- Seq(true, false); topK <- Seq(0, 2, 4, 10)) {
+      val score: Int => Double = r => if (flat) 0.5 else (r / 2).toDouble
+      val want = words.indices.sortWith((a, b) => score(a) > score(b) ||
+        (score(a) == score(b) && utf8Before(a, b))).take(topK)
+      val (got, _) = TopK.byRoundedScore(words.length, topK, score, utf8Before)
+      assert(got.toSeq == want, s"flat=$flat k=$topK")
+    }
+    assert(TopK.byRoundedScore(2, 2, _ => 0.5, utf8Before)._1.toSeq == Seq(0, 1),
+      "tilde ranks before the clef on a tie")
   }
 
   test("utf8 tie comparator: matches Spark's binary string ordering on " +

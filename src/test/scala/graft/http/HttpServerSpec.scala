@@ -47,6 +47,43 @@ class HttpServerSpec extends SparkSpec {
     assert(mapper.readTree(empty).size() == 0)
   }
 
+  test("/search_api rejects a non-integer or negative num with 400 and " +
+    "bounds num = Int.MaxValue by the live rows, on both regimes") {
+    for (bad <- Seq("-1", "abc", "1.5", "", "2147483648"))
+      assert(get(s"/search_api?q=label5&num=$bad")._1 == 400, s"num=$bad")
+    assert(mapper.readTree(get("/search_api?q=label5&num=0")._2).size() == 0)
+    val all = get("/search_api?q=label5&num=2147483647")
+    assert(all._1 == 200)
+    assert(mapper.readTree(all._2).size() == engine.count())
+    // the distributed regime answers the same: 400 before a Spark limit(-1)
+    // can fail the request with 500, every live row at Int.MaxValue
+    val store = new SnapshotStore(
+      java.nio.file.Files.createTempDirectory("graft-http-dist").toString)
+    store.initFrom(spark, s"$sf/embeddings.parquet")
+    val dist = new RClipEngine(spark, store, new DeterministicEmbedder(64),
+      fastPathMaxRows = 0L)
+    val s2 = new RClipHttpServer(dist).start()
+    try {
+      def get2(p: String): (Int, String) = {
+        val c = new URL(s"http://localhost:${s2.boundPort}$p").openConnection()
+          .asInstanceOf[HttpURLConnection]
+        val code = c.getResponseCode
+        val st = if (code >= 400) c.getErrorStream else c.getInputStream
+        (code, if (st == null) "" else new String(st.readAllBytes(), UTF_8))
+      }
+      assert(get2("/search_api?q=label5&num=-1")._1 == 400)
+      val (code, body) = get2("/search_api?q=label5&num=2147483647")
+      assert(code == 200 && mapper.readTree(body).size() == dist.count())
+    } finally s2.stop()
+  }
+
+  test("/thm rejects a size outside [1, MaxThumbSize] with 400") {
+    for (bad <- Seq("0", "-5", "abc", (RClipHttpServer.MaxThumbSize + 1).toString))
+      assert(get(s"/thm/-1?size=$bad")._1 == 400, s"size=$bad")
+    val (code, body, _) = get(s"/thm/-1?size=${RClipHttpServer.MaxThumbSize}")
+    assert(code == 200 && body.contains(s"""width="${RClipHttpServer.MaxThumbSize}""""))
+  }
+
   test("/ and /search serve the HTML shell") {
     val (code, body, ct) = get("/")
     assert(code == 200 && ct.startsWith("text/html") && body.contains("<form"))
