@@ -84,20 +84,32 @@ object KnnGraph {
       .withColumn("bucket", bucketOf(col("src"), nb))
       .repartition(col("bucket")) // one writer task per bucket dir
       .write.mode("overwrite").partitionBy("bucket").parquet(path)
+    // temp file + rename: a crash leaves either no sidecar or a whole one
     val (fs, p) = hadoopFs(edges.sparkSession, path)
-    val out = fs.create(p, true)
+    val tmp = p.suffix(".tmp")
+    val out = fs.create(tmp, true)
     try out.write(nb.toString.getBytes("UTF-8")) finally out.close()
+    if (!fs.rename(tmp, p))
+      throw new java.io.IOException(s"could not rename $tmp to $p")
   }
 
-  /** Legacy-64 ONLY when the sidecar is genuinely absent (pre-sidecar
-    * artifacts); any other failure — permission, corrupt content, a
-    * partial save — rethrows instead of silently probing under the
-    * wrong modulus (ADVICE r09: a silent 64 fallback makes neighbors()
-    * return wrong/empty rows and appendSave corrupt the artifact). */
+  /** Legacy-64 ONLY when the sidecar is absent AND every stored edge sits
+    * in the bucket modulus 64 gives it (a pre-sidecar artifact); data
+    * written under another modulus whose sidecar never landed (a save
+    * that died between the two writes) fails loudly, as does any other
+    * failure — permission, corrupt content — instead of silently probing
+    * under the wrong modulus (a wrong modulus makes neighbors() return
+    * wrong/empty rows and appendSave corrupt the artifact). */
   private def bucketsOf(spark: SparkSession, path: String): Long = {
     val (fs, p) = hadoopFs(spark, path)
-    if (!fs.exists(p)) LEGACY_BUCKETS
-    else {
+    if (!fs.exists(p)) {
+      val misplaced = spark.read.parquet(path)
+        .filter(col("bucket") =!= bucketOf(col("src"), LEGACY_BUCKETS))
+      if (!misplaced.isEmpty)
+        throw new IllegalStateException(s"$path has no _graft_buckets sidecar " +
+          s"and its bucket directories do not match modulus $LEGACY_BUCKETS")
+      LEGACY_BUCKETS
+    } else {
       val buf = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
       val in = fs.open(p)
       try in.readFully(0, buf) finally in.close()

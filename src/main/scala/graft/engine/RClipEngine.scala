@@ -765,11 +765,16 @@ final class RClipEngine(
 
   // ------------------------------------------------------------ mutations
 
+  // The mutations below read the newest snapshot and commit the next
+  // version, and SnapshotStore assumes one writer: they hold the engine
+  // monitor (as reload() does) so concurrent callers, such as the HTTP
+  // server's workers, cannot lose an update or race to the same version.
+
   /** M1 — censor: soft-delete by id, gated by key (`rclip_server.py:
     * 423-428`). Snapshot rewrite + cache refresh. */
   def censor(id: Long, key: String): Boolean =
     if (!censorKey.contains(key)) false
-    else {
+    else synchronized {
       val base = store.read(spark)
       val withDel =
         if (base.columns.contains("deleted")) base
@@ -784,7 +789,7 @@ final class RClipEngine(
     * keep the smallest id, soft-delete the rest. The reference's intended
     * (dead-code) semantics (`rclip_server.py:237-245`) as a window:
     * one shuffle on the vector, no driver data. */
-  def dedupByEmbedding(): Long = {
+  def dedupByEmbedding(): Long = synchronized {
     val base = store.read(spark)
     val withDel =
       if (base.columns.contains("deleted")) base
@@ -804,7 +809,7 @@ final class RClipEngine(
   /** S7 — upsert: incoming rows replace same-key rows, others survive.
     * The reference's `ON CONFLICT(filepath) DO UPDATE`
     * (`index_wikimedia.py:86-103`) as a left-anti + union snapshot. */
-  def upsert(incoming: DataFrame, key: String): Unit = {
+  def upsert(incoming: DataFrame, key: String): Unit = synchronized {
     val base = store.read(spark)
     val merged = incoming.unionByName(
       base.join(incoming, Seq(key), "left_anti"), allowMissingColumns = true)

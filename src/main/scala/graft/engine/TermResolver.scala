@@ -86,14 +86,15 @@ final class TermResolver(
       case JsonTerm(t) => t
       case b           => b.text
     }
-    cache.synchronized {
-      val hit = cache.get(key)
-      if (hit != null) hit
-      else {
-        val v = resolveUncached(body)
-        cache.put(key, v)
-        v
-      }
+    val hit = cache.synchronized(cache.get(key))
+    if (hit != null) hit
+    else {
+      // computed outside the lock: a miss can run a Spark job (image_id)
+      // or a fetch (URL), and concurrent requests must not wait on it. A
+      // racing duplicate is pure, so the first insert wins.
+      val v = resolveUncached(body)
+      val raced = cache.synchronized(cache.putIfAbsent(key, v))
+      if (raced != null) raced else v
     }
   }
 

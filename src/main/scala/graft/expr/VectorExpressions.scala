@@ -666,7 +666,9 @@ object VectorExpressions {
     * the merge does ~|A|+|B| byte-wise compares and allocates nothing.
     * Sortedness is the caller's contract: sort once per DOC on the
     * (broadcast) sets side, merge once per candidate PAIR. Both engines'
-    * outputs are unchanged — intersection size is order-free. */
+    * outputs are unchanged — intersection size is order-free. A null
+    * element is skipped by the merge, wherever the sort put it, and
+    * counts once when both sides hold one, as in `array_intersect`. */
   case class StrSortedInterSize(left: Expression, right: Expression)
       extends BinaryExpression with ExpectsInputTypes {
     override def inputTypes: Seq[DataType] =
@@ -679,13 +681,20 @@ object VectorExpressions {
       val y = b.asInstanceOf[ArrayData]
       val nx = x.numElements(); val ny = y.numElements()
       var i = 0; var j = 0; var c = 0L
+      var xNull = false; var yNull = false
       while (i < nx && j < ny) {
-        val cmp = x.getUTF8String(i).compareTo(y.getUTF8String(j))
-        if (cmp == 0) { c += 1L; i += 1; j += 1 }
-        else if (cmp < 0) i += 1
-        else j += 1
+        if (x.isNullAt(i)) { xNull = true; i += 1 }
+        else if (y.isNullAt(j)) { yNull = true; j += 1 }
+        else {
+          val cmp = x.getUTF8String(i).compareTo(y.getUTF8String(j))
+          if (cmp == 0) { c += 1L; i += 1; j += 1 }
+          else if (cmp < 0) i += 1
+          else j += 1
+        }
       }
-      c
+      while (!xNull && i < nx) { xNull = x.isNullAt(i); i += 1 }
+      while (!yNull && j < ny) { yNull = y.isNullAt(j); j += 1 }
+      if (xNull && yNull) c + 1L else c
     }
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -693,15 +702,23 @@ object VectorExpressions {
         val nx = ctx.freshName("nx"); val ny = ctx.freshName("ny")
         val i = ctx.freshName("i"); val j = ctx.freshName("j")
         val c = ctx.freshName("c"); val cmp = ctx.freshName("cmp")
+        val xn = ctx.freshName("xNull"); val yn = ctx.freshName("yNull")
         s"""int $nx = $a.numElements();
            |int $ny = $b.numElements();
            |int $i = 0; int $j = 0; long $c = 0L;
+           |boolean $xn = false; boolean $yn = false;
            |while ($i < $nx && $j < $ny) {
-           |  int $cmp = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
-           |  if ($cmp == 0) { $c++; $i++; $j++; }
-           |  else if ($cmp < 0) { $i++; } else { $j++; }
+           |  if ($a.isNullAt($i)) { $xn = true; $i++; }
+           |  else if ($b.isNullAt($j)) { $yn = true; $j++; }
+           |  else {
+           |    int $cmp = $a.getUTF8String($i).compareTo($b.getUTF8String($j));
+           |    if ($cmp == 0) { $c++; $i++; $j++; }
+           |    else if ($cmp < 0) { $i++; } else { $j++; }
+           |  }
            |}
-           |${ev.value} = $c;""".stripMargin
+           |while (!$xn && $i < $nx) { $xn = $a.isNullAt($i); $i++; }
+           |while (!$yn && $j < $ny) { $yn = $b.isNullAt($j); $j++; }
+           |${ev.value} = ($xn && $yn) ? $c + 1L : $c;""".stripMargin
       })
 
     override protected def withNewChildrenInternal(

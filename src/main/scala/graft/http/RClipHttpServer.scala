@@ -5,6 +5,8 @@ import com.fasterxml.jackson.databind.ObjectMapper
 import graft.engine.{RClipEngine, RedirectUrl, ResizedBytes, SvgPlaceholder}
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{ArrayBlockingQueue, ThreadPoolExecutor, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
 
 /** The reference's HTTP surface (`rclip_server.py:376-492`) over the
   * engine façade — every endpoint, same paths, same response shapes —
@@ -20,6 +22,19 @@ import java.nio.charset.StandardCharsets.UTF_8
   * resized bytes), `/info/{id}`, `/copyright_message`, and S9 static
   * assets (`/js/...`, served from an optional assets dir — the
   * reference's `FileResponse('./assets/...')`).
+  *
+  * Requests run on a fixed pool of one daemon worker per available
+  * processor (the reference serves from uvicorn worker threads) with a
+  * bounded queue: past [[RClipHttpServer.MaxPending]] requests in flight
+  * or queued, the pool rejects the exchange, the JDK's dispatcher thread
+  * runs it instead, and the route answers 503 with `Retry-After` rather
+  * than queueing without bound. Accepted sockets get TCP_NODELAY: the JDK
+  * writes the response headers and the body separately, and with Nagle
+  * on the body waits for the client's (delayed, ~40 ms) ACK of the
+  * headers. A request whose headers have not arrived within
+  * [[RClipHttpServer.MaxRequestSeconds]] is closed, so a client that
+  * sends half a request holds a worker, or the dispatcher over the cap,
+  * for a bounded time.
   */
 final class RClipHttpServer(
     engine: RClipEngine,
@@ -32,7 +47,28 @@ final class RClipHttpServer(
       graft.multimodal.MultimodalOps.FakeMediaDecoder) {
 
   private val mapper = new ObjectMapper()
-  private val server = HttpServer.create(new InetSocketAddress(port), 0)
+  private val server = RClipHttpServer.bind(port)
+  // set on the dispatcher thread while it runs an exchange the pool
+  // rejected: the route then answers 503 (an exception out of `execute`
+  // would make the JDK drop the connection instead of answering)
+  private val shedding = ThreadLocal.withInitial[java.lang.Boolean](() => false)
+  private val workers: ThreadPoolExecutor = {
+    val n = Runtime.getRuntime.availableProcessors()
+    val prefix = s"graft-http-${boundPort}-"
+    val made = new AtomicInteger(0)
+    new ThreadPoolExecutor(n, n, 0L, TimeUnit.MILLISECONDS,
+      new ArrayBlockingQueue[Runnable](math.max(1, RClipHttpServer.MaxPending - n)),
+      (r: Runnable) => {
+        val t = new Thread(r, prefix + made.incrementAndGet())
+        t.setDaemon(true)
+        t
+      },
+      (r: Runnable, _: ThreadPoolExecutor) => {
+        shedding.set(true)
+        try r.run() finally shedding.set(false)
+      })
+  }
+  server.setExecutor(workers)
 
   /** Bound port (useful when constructed with port 0). */
   def boundPort: Int = server.getAddress.getPort
@@ -85,8 +121,12 @@ final class RClipHttpServer(
 
   private def handle(path: String)(f: HttpExchange => Unit): Unit =
     server.createContext(path, (ex: HttpExchange) =>
-      try f(ex)
-      catch {
+      try {
+        if (shedding.get)
+          send(ex, 503, "server busy".getBytes(UTF_8), "text/plain",
+            Map("Retry-After" -> "1"))
+        else f(ex)
+      } catch {
         // NonFatal only: a VM error (OOM, stack overflow) must propagate,
         // not masquerade as a 500. The body is generic — exception
         // messages carry internal paths/SQL and belong in the server log.
@@ -291,10 +331,42 @@ final class RClipHttpServer(
   // ------------------------------------------------------------ lifecycle
 
   def start(): RClipHttpServer = { server.start(); this }
-  def stop(): Unit = server.stop(0)
+
+  /** Closes the listener and every connection, then interrupts the
+    * workers and waits for them to exit. */
+  def stop(): Unit = {
+    server.stop(0)
+    workers.shutdownNow()
+    workers.awaitTermination(30, TimeUnit.SECONDS)
+  }
+
+  /** Requests admitted and not yet finished (running or queued). */
+  private[http] def pending: Int = workers.getActiveCount + workers.getQueue.size
 }
 
 object RClipHttpServer {
   /** Largest `/thm` size: a local resize allocates size × size·3/4 pixels. */
   val MaxThumbSize: Int = 4096
+
+  /** Most requests in flight plus queued before new ones get 503: at the
+    * ~60 ms of a `num=1000` search on four workers, a full queue already
+    * waits about 4 s. */
+  val MaxPending: Int = 256
+
+  /** Longest a request may take to deliver its headers (its body too, if
+    * it has one), counted from when the dispatcher first sees its bytes.
+    * Time in the pool's queue counts, so this sits well above the wait of
+    * a full queue (see [[MaxPending]]). */
+  val MaxRequestSeconds: Int = 30
+
+  /** Binds the JDK server with TCP_NODELAY and the request deadline on,
+    * unless either property was set explicitly. The JDK reads both once,
+    * when the first server in the JVM is created. */
+  private def bind(port: Int): HttpServer = {
+    def default(key: String, value: String): Unit =
+      if (System.getProperty(key) == null) System.setProperty(key, value)
+    default("sun.net.httpserver.nodelay", "true")
+    default("sun.net.httpserver.maxReqTime", MaxRequestSeconds.toString)
+    HttpServer.create(new InetSocketAddress(port), 0)
+  }
 }

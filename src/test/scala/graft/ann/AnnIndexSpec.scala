@@ -153,4 +153,29 @@ class AnnIndexSpec extends SparkSpec {
       .filter(_.getName.startsWith("bucket=")).map(_.getName).toSet
     assert(bucketDirs.nonEmpty)
   }
+
+  test("KnnGraph load without the _graft_buckets sidecar: legacy modulus 64 " +
+    "only when the stored buckets match it, a loud failure otherwise") {
+    import spark.implicits._
+    val edges = (0L until 200L).flatMap(s =>
+      (1L to 3L).map(d => (s, (s + d * 7) % 200L))).toDF("src", "nbr")
+    def dropSidecar(path: String): Unit = new java.io.File(path).listFiles()
+      .filter(_.getName.contains("_graft_buckets")).foreach(_.delete())
+    // a save that died before its sidecar landed: written under nb != 64
+    val torn = java.nio.file.Files.createTempDirectory("graft-knn-torn").toString + "/g"
+    KnnGraph.save(edges, torn)
+    val nb = KnnGraph.load(spark, torn).numBuckets
+    assert(nb != KnnGraph.LEGACY_BUCKETS)
+    assert(!new java.io.File(torn).listFiles().exists(_.getName.endsWith(".tmp")))
+    dropSidecar(torn)
+    val err = intercept[IllegalStateException](KnnGraph.load(spark, torn))
+    assert(err.getMessage.contains("_graft_buckets"))
+    // a pre-sidecar artifact: bucketed by src mod 64, no sidecar
+    val legacy = java.nio.file.Files.createTempDirectory("graft-knn-legacy").toString + "/g"
+    edges.withColumn("bucket", pmod(col("src"), lit(64L)))
+      .write.partitionBy("bucket").parquet(legacy)
+    val g = KnnGraph.load(spark, legacy)
+    assert(g.numBuckets == KnnGraph.LEGACY_BUCKETS)
+    assert(g.neighbors(Seq(5L, 70L).toDF("vec_id")).count() == 6)
+  }
 }

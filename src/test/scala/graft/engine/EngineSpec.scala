@@ -159,6 +159,32 @@ class EngineSpec extends SparkSpec {
     assert(n2 == n1) // second resolve hit the cache
   }
 
+  test("Q12: a miss resolves outside the LRU lock — a cached term answers " +
+    "while another thread's image_id lookup is blocked") {
+    import java.util.concurrent.{CompletableFuture, CountDownLatch, TimeUnit}
+    val entered = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val stub = new StoredVectors {
+      def byId(id: Long): Option[Array[Float]] = {
+        entered.countDown()
+        release.await()
+        Some(Array.fill(8)(0.5f))
+      }
+      def random(): Option[Array[Float]] = None
+    }
+    val r = new TermResolver(new DeterministicEmbedder(8), stub)
+    val cached = r.resolve("zebra").get
+    val slow = CompletableFuture.supplyAsync(() => r.resolve("""{"image_id":1}"""))
+    try {
+      assert(entered.await(10, TimeUnit.SECONDS))
+      val again = CompletableFuture.supplyAsync(() => r.resolve("zebra"))
+        .get(10, TimeUnit.SECONDS)
+      assert(again.get.sameElements(cached))
+    } finally release.countDown()
+    assert(slow.get(10, TimeUnit.SECONDS).isDefined)
+    assert(r.cacheStats._1 == 2) // the slow miss still lands in the LRU
+  }
+
   test("K2: similarWords returns scored words desc") {
     val rows = engine.similarWords("label3", 5).collect()
     assert(rows.nonEmpty && rows.head.getString(0) == "label3")

@@ -266,4 +266,47 @@ class VectorExpressionsSpec extends SparkSpec {
       Literal.create(Seq("b", "c", "d"), ArrayType(StringType)))
     assert(e.eval(null).asInstanceOf[Long] == 2L)
   }
+
+  test("gram_inter_sorted skips null elements and equals " +
+    "size(array_intersect) on inputs with nulls (codegen AND interpreted)") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.BoundReference
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    // non-null elements ascending; nulls first (sort_array), last
+    // (array_sort) or in between
+    val cases: Seq[(Seq[String], Seq[String])] = Seq(
+      (Seq(null, "a", "b"), Seq(null, "b")),
+      (Seq(null, "a"), Seq("a", "c")),
+      (Seq("a", "b"), Seq(null, "b")),
+      (Seq(null), Seq(null)),
+      (Seq(null), Seq.empty),
+      (Seq("a", "b", null), Seq("z", null)),
+      (Seq("a", "b", "c", null), Seq(null)),
+      (Seq("a", null, "c"), Seq("c", null)),
+      (Seq(null, null, "a"), Seq("a")))
+    val want = cases.toDF("a", "b")
+      .select(expr("CAST(size(array_intersect(a, b)) AS BIGINT)"))
+      .collect().map(_.getLong(0)).toSeq
+    assert(want.take(4) == Seq(2L, 1L, 1L, 1L)) // nulls really counted
+    val e = VectorExpressions.StrSortedInterSize(
+      BoundReference(0, ArrayType(StringType), nullable = true),
+      BoundReference(1, ArrayType(StringType), nullable = true))
+    val codegen = GenerateUnsafeProjection.generate(Seq(e))
+    def arr(xs: Seq[String]) = new GenericArrayData(
+      xs.map(x => if (x == null) null else UTF8String.fromString(x)).toArray[Any])
+    cases.zip(want).foreach { case ((a, b), w) =>
+      val row = InternalRow(arr(a), arr(b))
+      assert(e.eval(row) == w, (a, b))
+      assert(codegen(row).getLong(0) == w, (a, b))
+    }
+    // through SQL on sorted inputs
+    val viaSql = cases.toDF("a", "b")
+      .select(expr("gram_inter_sorted(sort_array(a), sort_array(b))"))
+      .collect().map(_.getLong(0)).toSeq
+    assert(viaSql == want)
+  }
 }

@@ -1,29 +1,34 @@
 package graft.http
 
 import graft.SparkSpec
-import graft.embed.DeterministicEmbedder
+import graft.embed.{DeterministicEmbedder, Embedder}
 import graft.engine.{RClipEngine, SnapshotStore}
 import com.fasterxml.jackson.databind.ObjectMapper
 import java.net.{HttpURLConnection, URL}
 import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+import scala.jdk.CollectionConverters._
 
 class HttpServerSpec extends SparkSpec {
 
   private val mapper = new ObjectMapper()
 
-  private lazy val engine: RClipEngine = {
+  private def freshEngine(
+      embedder: Embedder = new DeterministicEmbedder(64)): RClipEngine = {
     val dir = java.nio.file.Files.createTempDirectory("graft-http").toString
     val store = new SnapshotStore(dir)
     store.initFrom(spark, s"$sf/embeddings.parquet")
-    new RClipEngine(spark, store, new DeterministicEmbedder(64),
-      censorKey = Some("secret"))
+    new RClipEngine(spark, store, embedder, censorKey = Some("secret"))
   }
+  private lazy val engine: RClipEngine = freshEngine()
   private lazy val server: RClipHttpServer =
     new RClipHttpServer(engine).start()
   private def base = s"http://localhost:${server.boundPort}"
 
-  private def get(path: String): (Int, String, String) = {
-    val conn = new URL(base + path).openConnection()
+  private def get(path: String): (Int, String, String) = getFrom(base, path)
+
+  private def getFrom(root: String, path: String): (Int, String, String) = {
+    val conn = new URL(root + path).openConnection()
       .asInstanceOf[HttpURLConnection]
     conn.setInstanceFollowRedirects(false)
     val code = conn.getResponseCode
@@ -169,5 +174,222 @@ class HttpServerSpec extends SparkSpec {
       assert(get2("/js/missing.js")._1 == 404)
       assert(get2("/..%2F..%2Fetc%2Fpasswd")._1 == 404)
     } finally s2.stop()
+  }
+
+  test("concurrent mixed requests each get the serial answer") {
+    val paths = (0 until 8).map { t =>
+      (0 until 25).map { i =>
+        val n = t * 25 + i
+        (n % 3) match {
+          case 0 =>
+            val q = if (n % 9 == 0) s"""{"image_id":${n + 1}} -label${n % 10}"""
+              else s"label${n % 10} -label${(n / 10) % 10} x$n"
+            s"/search_api?q=${java.net.URLEncoder.encode(q, UTF_8)}&num=1000"
+          case 1 => s"/similar_words?q=label${n % 10}+w$n"
+          case _ => s"/clip_embedding?q=label${n % 10}+e$n"
+        }
+      }
+    }
+    // serial answers from one server, concurrent ones from a second over a
+    // cold engine, so concurrent requests also race on resolver misses and
+    // on the first build of the serving matrix
+    val serialServer = new RClipHttpServer(freshEngine()).start()
+    val coldServer = new RClipHttpServer(freshEngine()).start()
+    val pool = Executors.newFixedThreadPool(8)
+    try {
+      val serial = paths.flatten.map(p =>
+        p -> getFrom(s"http://localhost:${serialServer.boundPort}", p)).toMap
+      assert(serial.values.forall(_._1 == 200))
+      val answers = pool.invokeAll(paths.map { ps =>
+        (() => ps.map(p => p -> getFrom(s"http://localhost:${coldServer.boundPort}", p))):
+          Callable[Seq[(String, (Int, String, String))]]
+      }.asJava).asScala.flatMap(_.get(120, TimeUnit.SECONDS))
+      assert(answers.length == 200)
+      answers.foreach { case (p, got) => assert(got == serial(p), p) }
+    } finally {
+      pool.shutdownNow()
+      serialServer.stop()
+      coldServer.stop()
+    }
+  }
+
+  test("a request over the admission cap is answered 503 with Retry-After, " +
+    "not a reset") {
+    val s2 = new RClipHttpServer(engine).start()
+    val addr = new java.net.InetSocketAddress("localhost", s2.boundPort)
+    val held = scala.collection.mutable.ArrayBuffer.empty[java.net.Socket]
+    def await(cond: => Boolean): Unit = {
+      val deadline = System.nanoTime() + 30000000000L
+      while (!cond && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(cond)
+    }
+    def request(): HttpURLConnection = {
+      val c = new URL(s"http://localhost:${s2.boundPort}/search_api?q=label1")
+        .openConnection().asInstanceOf[HttpURLConnection]
+      c.setConnectTimeout(10000)
+      c.setReadTimeout(30000)
+      c
+    }
+    try {
+      // each socket sends half a request: its exchange holds a worker (or
+      // a queue slot) reading headers until the socket closes
+      (1 to RClipHttpServer.MaxPending).foreach { _ =>
+        val sock = new java.net.Socket()
+        held += sock
+        sock.connect(addr, 10000)
+        sock.getOutputStream.write("GET /search_api?q=label1 HTTP/1.1\r\n".getBytes(UTF_8))
+        sock.getOutputStream.flush()
+      }
+      await(s2.pending == RClipHttpServer.MaxPending)
+      val over = request()
+      assert(over.getResponseCode == 503)
+      assert(over.getHeaderField("Retry-After") == "1")
+      over.disconnect()
+      held.foreach(_.close())
+      await(s2.pending == 0)
+      val after = request()
+      assert(after.getResponseCode == 200)
+      after.disconnect()
+    } finally {
+      held.foreach(_.close())
+      s2.stop()
+    }
+  }
+
+  test("past the admission cap, a half-sent request holds the dispatcher " +
+    "only until the request deadline; a later request still gets its 503") {
+    // URL terms embed through embedImage, which blocks here: the requests
+    // on the workers stay in their handlers, so the gate stays full
+    val release = new CountDownLatch(1)
+    val base64 = new DeterministicEmbedder(64)
+    val blocking = new Embedder {
+      val dim: Int = 64
+      def embedText(text: String): Array[Float] = base64.embedText(text)
+      def embedImage(bytes: Array[Byte]): Array[Float] = {
+        release.await()
+        base64.embedImage(bytes)
+      }
+    }
+    val s2 = new RClipHttpServer(freshEngine(blocking)).start()
+    val addr = new java.net.InetSocketAddress("localhost", s2.boundPort)
+    val held = scala.collection.mutable.ArrayBuffer.empty[java.net.Socket]
+    def send(text: String): Unit = {
+      val sock = new java.net.Socket()
+      held += sock
+      sock.connect(addr, 10000)
+      sock.getOutputStream.write(text.getBytes(UTF_8))
+      sock.getOutputStream.flush()
+    }
+    def await(cond: => Boolean): Unit = {
+      val deadline = System.nanoTime() + 30000000000L
+      while (!cond && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(cond)
+    }
+    def request(): HttpURLConnection = {
+      val c = new URL(s"http://localhost:${s2.boundPort}/search_api?q=label1")
+        .openConnection().asInstanceOf[HttpURLConnection]
+      c.setConnectTimeout(10000)
+      c.setReadTimeout((RClipHttpServer.MaxRequestSeconds + 60) * 1000)
+      c
+    }
+    try {
+      (1 to RClipHttpServer.MaxPending).foreach { _ =>
+        send("GET /search_api?q=https%3A%2F%2Fexample.com%2Fa.jpg HTTP/1.1\r\n" +
+          "Host: localhost\r\n\r\n")
+      }
+      await(s2.pending == RClipHttpServer.MaxPending)
+      // over the cap: the dispatcher runs this exchange itself and blocks
+      // reading its headers until the deadline closes the connection
+      send("GET /search_api?q=label1 HTTP/1.1\r\n")
+      Thread.sleep(500)
+      val t0 = System.nanoTime()
+      val over = request()
+      assert(over.getResponseCode == 503)
+      assert(over.getHeaderField("Retry-After") == "1")
+      over.disconnect()
+      // the 503 waited for the deadline, so the stall was real
+      assert((System.nanoTime() - t0) / 1e9 > RClipHttpServer.MaxRequestSeconds / 2)
+      release.countDown()
+      await(s2.pending == 0)
+      val after = request()
+      assert(after.getResponseCode == 200)
+      after.disconnect()
+    } finally {
+      release.countDown()
+      held.foreach(_.close())
+      s2.stop()
+    }
+  }
+
+  test("concurrent censors of different ids both land") {
+    val s2 = new RClipHttpServer(freshEngine()).start()
+    val root = s"http://localhost:${s2.boundPort}"
+    def ids(): Set[Long] = {
+      val (code, body, _) = getFrom(root, "/search_api?q=label5&num=2147483647")
+      assert(code == 200)
+      mapper.readTree(body).elements().asScala.map(_.get(0).asLong()).toSet
+    }
+    val (a, b) = (7L, 11L)
+    val before = ids()
+    assert(before.contains(a) && before.contains(b))
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(2)
+    try {
+      val answers = Seq(a, b).map { id =>
+        pool.submit((() => {
+          start.await()
+          getFrom(root, s"/censor/$id?censorship_key=secret")
+        }): Callable[(Int, String, String)])
+      }
+      start.countDown()
+      Seq(a, b).zip(answers.map(_.get(120, TimeUnit.SECONDS))).foreach {
+        case (id, (code, body, _)) =>
+          assert(code == 200, body)
+          assert(mapper.readTree(body).get("msg").asText() == s"Ok. $id is now censored")
+      }
+      val left = ids()
+      assert(!left.contains(a) && !left.contains(b))
+    } finally {
+      pool.shutdownNow()
+      s2.stop()
+    }
+  }
+
+  test("stop() leaves no worker thread alive") {
+    val s2 = new RClipHttpServer(engine).start()
+    val prefix = s"graft-http-${s2.boundPort}-"
+    def workers = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.getName.startsWith(prefix) && t.isAlive)
+    val pool = Executors.newFixedThreadPool(4)
+    try {
+      pool.invokeAll((1 to 8).map { i =>
+        (() => new URL(s"http://localhost:${s2.boundPort}/clip_embedding?q=w$i")
+          .openConnection().asInstanceOf[HttpURLConnection].getResponseCode): Callable[Int]
+      }.asJava).asScala.foreach(f => assert(f.get() == 200))
+    } finally pool.shutdownNow()
+    assert(workers.nonEmpty)
+    s2.stop()
+    assert(workers.isEmpty, workers.map(_.getName))
+  }
+
+  test("sequential keep-alive searches are not held by delayed ACKs: " +
+    "median of 30 num=1000 requests under 20 ms") {
+    val client = java.net.http.HttpClient.newBuilder()
+      .version(java.net.http.HttpClient.Version.HTTP_1_1).build()
+    val req = java.net.http.HttpRequest.newBuilder(
+      java.net.URI.create(s"$base/search_api?q=label4+-label7&num=1000")).GET().build()
+    def once(): Double = {
+      val t0 = System.nanoTime()
+      val r = client.send(req, java.net.http.HttpResponse.BodyHandlers.ofByteArray())
+      assert(r.statusCode() == 200)
+      (System.nanoTime() - t0) / 1e6
+    }
+    // the stall's fix is the JDK's NODELAY property, set before the first
+    // server is created; check it directly so a slow host's timing is
+    // told apart from a lost setting
+    assert(System.getProperty("sun.net.httpserver.nodelay") == "true")
+    (1 to 10).foreach(_ => once()) // warm: index build, JIT
+    val ms = (1 to 30).map(_ => once()).sorted
+    assert(ms(15) < 20.0, ms)
   }
 }
