@@ -176,9 +176,18 @@ final class RClipEngine(
 
   // ------------------------------------------------- StoredVectors (J2/Q7)
 
-  override def byId(id: Long): Option[Array[Float]] =
-    activeDf.filter(col(idCol) === id).select(col(vecCol))
-      .as[Array[Float]].collect().headOption
+  /** From the RAM matrix when it is built (the first row with this id, in
+    * the collect order the Spark lookup's `headOption` also sees; no job),
+    * otherwise one Spark filter job. Never builds the matrix. */
+  override def byId(id: Long): Option[Array[Float]] = fastCache.get() match {
+    case RClipEngine.FastBuilt(idx) =>
+      var r = 0
+      while (r < idx.ids.length && idx.ids(r) != id) r += 1
+      if (r == idx.ids.length) None else Some(idx.vecs(r).clone())
+    case _ =>
+      activeDf.filter(col(idCol) === id).select(col(vecCol))
+        .as[Array[Float]].collect().headOption
+  }
 
   override def random(): Option[Array[Float]] =
     activeDf.select(col(vecCol)).orderBy(rand(seed)).limit(1)
@@ -302,16 +311,26 @@ final class RClipEngine(
   }
 
   /** Driver-side twin of [[scoreTopK]]: identical arithmetic
-    * ([[VectorOps.vecDot]] = vec_dot; [[VectorOps.round4]] = Spark's
-    * `round`) and the identical (score DESC, id ASC) cut, taken by the
-    * shared k-bounded selector [[TopK.byRoundedScore]] on the ROUNDED
-    * score — a row below the k-th kept raw score can tie it after
-    * rounding and win on its lower id — so the two paths are
-    * indistinguishable to a caller. */
+    * ([[VectorOps.vecDot8]], bit-identical to vec_dot;
+    * [[VectorOps.round4]] = Spark's `round`) and the identical
+    * (score DESC, id ASC) cut, taken by the shared k-bounded selector
+    * [[TopK.byRoundedScore]] on the ROUNDED score — a row below the k-th
+    * kept raw score can tie it after rounding and win on its lower id — so
+    * the two paths are indistinguishable to a caller. Rows are scored one
+    * 8-row block at a time into a fixed buffer, so a request allocates
+    * nothing corpus-sized. */
   private def fastScore(idx: RClipEngine.FastIndex,
       v: Array[Float], k: Int): Array[(Long, Double)] = {
-    val (rows, scores) = TopK.byRoundedScore(idx.ids.length, k,
-      r => VectorOps.vecDot(idx.vecs(r), v), (a, b) => idx.ids(a) < idx.ids(b))
+    val qd = v.map(_.toDouble)
+    val block = new Array[Double](VectorOps.Block)
+    var at = -VectorOps.Block // first row of the block held in `block`
+    val (rows, scores) = TopK.byRoundedScore(idx.ids.length, k, r => {
+      if (r < at || r >= at + VectorOps.Block) {
+        at = r - r % VectorOps.Block
+        VectorOps.vecDot8(idx.vecs, at, v, qd, block)
+      }
+      block(r - at)
+    }, (a, b) => idx.ids(a) < idx.ids(b))
     Array.tabulate(rows.length)(i => (idx.ids(rows(i)), scores(i)))
   }
 

@@ -349,8 +349,8 @@ object RClipHttpServer {
   val MaxThumbSize: Int = 4096
 
   /** Most requests in flight plus queued before new ones get 503: at the
-    * ~60 ms of a `num=1000` search on four workers, a full queue already
-    * waits about 4 s. */
+    * ~47 ms of a `num=1000` search over 2^16 × 512 rows on four workers,
+    * a full queue already waits about 3 s. */
   val MaxPending: Int = 256
 
   /** Longest a request may take to deliver its headers (its body too, if

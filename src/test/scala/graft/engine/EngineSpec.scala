@@ -103,6 +103,80 @@ class EngineSpec extends SparkSpec {
         s"planted e$d k=$k")
     assert(rows(tieFast, basis(0), 1) == Seq((1L, 0.5)))
     assert(rows(tieFast, basis(1), 3).map(_._1) == Seq(5L, 6L, 1L))
+    // planted ragged block: 13 rows, one of them 63-dim among 64-dim rows,
+    // written as one file so it lands in the matrix's first 8-row block
+    // (which must then score through vecDot's min-length dot) and the
+    // last 5 rows form the short tail
+    val raggedDir =
+      java.nio.file.Files.createTempDirectory("graft-engine-ragged").toString
+    val ragged = new SnapshotStore(raggedDir)
+    val rnd = new java.util.Random(13)
+    ragged.write((0 until 13).map { r =>
+        val dim = if (r == 3) 63 else 64
+        val v = Array.fill(dim)(rnd.nextFloat() * 2 - 1)
+        if (r == 3) v(0) = 0.99f
+        (r.toLong + 1, VectorOps.normalize(v), r % 3)
+      }.toDF("vec_id", "embedding", "label").coalesce(1))
+    val raggedFast = new RClipEngine(spark, ragged, new DeterministicEmbedder(64))
+    val raggedDist = new RClipEngine(spark, ragged, new DeterministicEmbedder(64),
+      fastPathMaxRows = 0L)
+    val dense = VectorOps.normalize(Array.fill(64)(rnd.nextFloat() * 2 - 1))
+      .mkString("""{"clip_embedding":[""", ",", "]}")
+    for (q <- Seq(basis(0), basis(63), dense); k <- Seq(1, 5, 13))
+      assert(rows(raggedFast, q, k) == rows(raggedDist, q, k), s"ragged $q k=$k")
+    raggedFast.fastState match {
+      case RClipEngine.FastBuilt(idx) =>
+        assert(idx.vecs.take(VectorOps.Block).exists(_.length == 63))
+      case other => fail(s"ragged engine served without its matrix: $other")
+    }
+  }
+
+  test("byId: answered from the built RAM matrix with no Spark job, equal " +
+    "to the Spark lookup for present and absent ids; never builds it") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-engine").toString
+    val store = new SnapshotStore(dir)
+    store.initFrom(spark, s"$sf/embeddings.parquet")
+    val fast = new RClipEngine(spark, store, new DeterministicEmbedder(64))
+    val dist = new RClipEngine(spark, store, new DeterministicEmbedder(64),
+      fastPathMaxRows = 0L)
+    val ids = Seq(0L, 1L, 2L, 250L, 499L, 500L, -1L, Long.MaxValue)
+    val expected = ids.map(id => dist.byId(id).map(_.toSeq))
+    assert(expected.count(_.isDefined) >= 4)
+    assert(ids.map(id => fast.byId(id).map(_.toSeq)) == expected)
+    assert(fast.fastState == RClipEngine.FastUnbuilt)
+    fast.searchRows("label0", 1)
+    assert(fast.fastState.isInstanceOf[RClipEngine.FastBuilt])
+    // count the jobs this thread submits, up to a sentinel job: listener
+    // events arrive in order, so once the sentinel is seen every earlier
+    // job has been counted
+    val group = s"byid-${System.nanoTime()}"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.add(Option(p.getProperty("spark.job.description")).getOrElse("")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "byId")
+      val got = ids.map(id => fast.byId(id).map(_.toSeq))
+      spark.sparkContext.setJobDescription("sentinel")
+      spark.range(1).count()
+      assert(got == expected)
+      val jobs = Seq.newBuilder[String]
+      var d = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (d != null && d != "sentinel") {
+        jobs += d; d = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(d == "sentinel", "the sentinel job never reached the listener")
+      assert(jobs.result().isEmpty, s"byId ran Spark jobs on the built matrix: ${jobs.result()}")
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    // a returned vector is a copy: mutating it leaves the matrix intact
+    fast.byId(1L).get(0) = 42f
+    assert(fast.byId(1L).map(_.toSeq) == expected(1))
   }
 
   test("Q11: empty query → empty result") {

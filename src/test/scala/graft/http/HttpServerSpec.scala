@@ -82,6 +82,18 @@ class HttpServerSpec extends SparkSpec {
     } finally s2.stop()
   }
 
+  test("a malformed query string gets 400, not 500; a well-formed escape " +
+    "gets 200") {
+    // The JDK server answers 400 itself to a request line whose URI does
+    // not parse, as `%zz`, a trailing `%` or `%4` do not, before any route
+    // runs. A parsed URI's raw query only holds well-formed escapes, so
+    // the URL decode in `params` cannot fail.
+    for (p <- Seq("/search_api?q=%zz", "/similar_words?q=abc%", "/thm/1?size=%4"))
+      assert(get(p)._1 == 400, p)
+    val (code, body, _) = get("/search_api?q=label%205&num=3")
+    assert(code == 200 && mapper.readTree(body).isArray, body)
+  }
+
   test("/thm rejects a size outside [1, MaxThumbSize] with 400") {
     for (bad <- Seq("0", "-5", "abc", (RClipHttpServer.MaxThumbSize + 1).toString))
       assert(get(s"/thm/-1?size=$bad")._1 == 400, s"size=$bad")
