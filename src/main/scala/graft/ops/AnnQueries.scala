@@ -515,37 +515,29 @@ object AnnQueries {
     // d06's hot-bucket cap (VERDICT r04 #1), weighted so the boundary is
     // the clone-expanded one; oracle twin = duckTieredCappedCtes
     val bucketed = Lsh.capTieredBucketsWeighted(rawBucketed, col("cnt"))
-    // COUNTED join dispatch on every node-sized build side below (the
-    // d15/d16 size-adaptive lesson, extended per d06): below the bound
-    // the bucket/rep/member sides BROADCAST, so the candidate stream —
-    // the big side, O(distinct·bucket) rows — never exchanges (the
-    // pre-r9 shape shuffled it once per hinted SHUFFLE_HASH join: by
-    // bucket key, by gsrc, by gnbr, and by gnbr again for the member
-    // cut). Above the bound the builds stay SHUFFLE_HASH — thin
-    // per-partition hash tables at any corpus size, never the
-    // SortMergeJoin the planner's stats flipped to at 100× whose
-    // candidate-mass sorts spilled the disk to death (STRESS_r09).
-    def small(df: DataFrame): DataFrame =
-      if (n <= Lsh.NODE_BCAST_MAX_ROWS) broadcast(df)
-      else df.hint("SHUFFLE_HASH")
-    val candG = bucketed.as("x").join(small(bucketed).as("y"),
+    // every node-sized build side below goes through Joins.small, sized
+    // on n, so below its bound the candidate stream — the big side,
+    // O(distinct·bucket) rows — never exchanges (the pre-r9 shape
+    // shuffled it once per join: by bucket key, by gsrc, by gnbr, and by
+    // gnbr again for the member cut)
+    val candG = bucketed.as("x").join(Joins.small(bucketed, n).as("y"),
         col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
           (col("x.gid") =!= col("y.gid") ||
             (col("x.gid") === col("y.gid") && col("x.cnt") >= 2)))
       .select(col("x.gid").as("gsrc"), col("y.gid").as("gnbr"))
       .distinct()
     val scoredG = candG
-      .join(small(reps.select(col("gid").as("gsrc"), col("embedding").as("ea"))),
-        "gsrc")
-      .join(small(reps.select(col("gid").as("gnbr"), col("embedding").as("eb"))),
-        "gnbr")
+      .join(Joins.small(
+        reps.select(col("gid").as("gsrc"), col("embedding").as("ea")), n), "gsrc")
+      .join(Joins.small(
+        reps.select(col("gid").as("gnbr"), col("embedding").as("eb")), n), "gnbr")
       .select(col("gsrc"), col("gnbr"),
         (round(VectorOps.cosineColsNative(col("ea"), col("eb")), 4) + lit(0.0))
           .as("cos"))
     // the 4 smallest member ids per neighbor group (self-exclusion slack)
     val first4 = mm.filter(col("mrk") <= 4)
       .select(col("gid").as("gnbr"), col("vec_id").as("nbr"))
-    val contrib = scoredG.join(small(first4), "gnbr")
+    val contrib = scoredG.join(Joins.small(first4, n), "gnbr")
       .select(col("gsrc"), col("nbr"), col("cos"))
     // member expansion with a COUNTED singleton fast path: on a corpus
     // with no (or few) exact clones every group is its own member, so the
@@ -565,7 +557,7 @@ object AnnQueries {
         val single = contrib.join(broadcast(multi), Seq("gsrc"), "left_anti")
           .select(col("gsrc").as("src"), col("nbr"), col("cos"))
         val cloned = contrib.join(broadcast(multi), Seq("gsrc"), "left_semi")
-          .join(small(memberSrc), "gsrc")
+          .join(Joins.small(memberSrc, n), "gsrc")
           .select(col("src"), col("nbr"), col("cos"))
         single.unionByName(cloned)
       } else

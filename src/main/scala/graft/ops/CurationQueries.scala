@@ -119,14 +119,6 @@ object CurationQueries {
     (out, row.getLong(0), if (row.isNullAt(1)) 0L else row.getLong(1))
   }
 
-  /** Per-partition hash-build bound for the round joins: at or below this
-    * many label rows the per-round label table BROADCASTS into the edge
-    * and jump joins (zero shuffles per round beyond the min-aggregate);
-    * above it the joins fall back to shuffle-hash (labels are
-    * corpus-sized at 100 TB — d15's counted-strategy discipline; the
-    * label row count is CONSTANT across rounds, so one count decides). */
-  private val CP_BCAST_MAX_NODES = 1000000L
-
   def clusterPairs(pairs: DataFrame): DataFrame = {
     // per-round materialization is mandatory in iterative plans: without
     // it every round embeds the previous round's logical plan (×3: self
@@ -144,17 +136,16 @@ object CurationQueries {
         .withColumn("lbl", col("node")), "lbl")
     // no pairs → no clusters: skip the loop (sum over zero rows is NULL)
     if (nNodes > 0) {
-      // size-derived dispatch, decided ONCE (node count is round-constant)
-      val bcast = nNodes <= CP_BCAST_MAX_NODES
-      def side(df: DataFrame): DataFrame =
-        if (bcast) broadcast(df) else df.hint("shuffle_hash")
+      // the label row count is round-constant, so one count sizes every
+      // round's label joins
       var converged = false
       var iter = 0
       while (!converged && iter < 40) {
-        val nbr = edges.join(side(labels), edges("dst") === labels("node"))
+        val nbr = edges
+          .join(Joins.small(labels, nNodes), edges("dst") === labels("node"))
           .select(edges("src").as("node"), col("lbl"))
         val jump = labels.as("a")
-          .join(side(labels.as("b")), col("a.lbl") === col("b.node"))
+          .join(Joins.small(labels.as("b"), nNodes), col("a.lbl") === col("b.node"))
           .select(col("a.node").as("node"), col("b.lbl").as("lbl"))
         val (next, _, nextSum) = materializeFlatWithSum(
           labels.unionByName(nbr).unionByName(jump)
@@ -552,25 +543,20 @@ object CurationQueries {
     val seeds = Tables.embeddings(s, d)
       .filter(col("vec_id") % LP_SEED_MOD === 0)
       .select(col("vec_id"), col("label").cast("long").as("lbl"))
-      .localCheckpoint(true)
+      .localCheckpoint(false) // materialized by the seeds.count() job below
     // each round references the previous label table exactly ONCE
     // (lab → votes → inferred → lab'), so the unrolled plan is linear in
     // rounds — no per-round eager checkpoint needed (c11's argument; the
-    // old shape paid LP_ROUNDS materializing actions). The label table is
-    // node-sized: broadcast it into the edge join below the counted
-    // bound, shuffle-hash above (labels are corpus-sized at 100 TB).
-    // the table actually broadcast each round is lab = seeds ∪ inferred,
-    // which grows to EVERY node (≈ LP_SEED_MOD × seeds) — bound the
-    // dispatch on that, not on the seed count alone (ADVICE r09: the old
-    // seeds-only bound made the effective broadcast limit 5× the
-    // NODE_BCAST_MAX_ROWS discipline used everywhere else)
-    val bcast = seeds.count() * LP_SEED_MOD <= graft.vec.Lsh.NODE_BCAST_MAX_ROWS
-    def side(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df.hint("shuffle_hash")
+    // old shape paid LP_ROUNDS materializing actions). The label table
+    // joined each round is lab = seeds ∪ inferred, which grows to EVERY
+    // node (≈ LP_SEED_MOD × seeds) — size it on that, not on the seed
+    // count alone (ADVICE r09)
+    val labRows = seeds.count() * LP_SEED_MOD
     var lab = seeds
     for (_ <- 1 to LP_ROUNDS) {
       val votes = edges
-        .join(side(lab.select(col("vec_id").as("nbr"), col("lbl"))), "nbr")
+        .join(Joins.small(lab.select(col("vec_id").as("nbr"), col("lbl")), labRows),
+          "nbr")
         .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("v"))
       val w = Window.partitionBy(col("src"))
         .orderBy(col("v").desc, col("lbl").asc)
@@ -625,8 +611,8 @@ object CurationQueries {
   val c11_pagerank: Q = (s, d) => {
     val edges = AnnQueries.n09Graph(s, d)
     val nodes = Tables.embeddings(s, d).select(col("vec_id"))
-      .localCheckpoint(true)
-    val n = nodes.count()
+      .localCheckpoint(false)
+    val n = nodes.count() // this job also materializes the lazy checkpoint
     val teleport = (15L * PR_SCALE) / (100L * n)
     val outd = edges.groupBy(col("src"))
       .agg(count(lit(1)).cast("long").as("outdeg"))
@@ -635,22 +621,17 @@ object CurationQueries {
     // rank exactly ONCE (rank → in → rank'), so the unrolled plan is
     // LINEAR in rounds and needs no per-round eager checkpoint — the old
     // shape paid 10 materializing actions plus their dispatch; this one
-    // is a single action whose tree Catalyst plans once. Join dispatch is
-    // size-derived (d15's counted-strategy discipline): the rank/outd/in
-    // tables are all node-sized, so they BROADCAST below the bound and
-    // shuffle-hash above it (corpus-sized at 100 TB).
-    val bcast = n <= 1000000L
-    def side(df: DataFrame): DataFrame =
-      if (bcast) broadcast(df) else df.hint("shuffle_hash")
+    // is a single action whose tree Catalyst plans once. The rank/outd/in
+    // tables are all node-sized: n rows each.
     var rank = nodes.withColumn("r", lit(PR_SCALE / n))
     for (_ <- 1 to PR_ROUNDS) {
       val in = edges
-        .join(side(rank.select(col("vec_id").as("src"), col("r"))), "src")
-        .join(side(outd), "src")
+        .join(Joins.small(rank.select(col("vec_id").as("src"), col("r")), n), "src")
+        .join(Joins.small(outd, n), "src")
         .groupBy(col("nbr"))
         .agg(sum(expr("r div outdeg")).as("inr"))
       rank = nodes
-        .join(side(in.select(col("nbr").as("vec_id"), col("inr"))),
+        .join(Joins.small(in.select(col("nbr").as("vec_id"), col("inr")), n),
           Seq("vec_id"), "left")
         .selectExpr("vec_id",
           s"CAST($teleport + 85 * coalesce(inr, CAST(0 AS BIGINT)) div 100 AS BIGINT) AS r")

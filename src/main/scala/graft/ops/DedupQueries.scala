@@ -535,15 +535,11 @@ object DedupQueries {
     val exact = d05_cosine_brute(s, d)
     val found = d06Pairs(s, d)
       .select(col("id_a"), col("id_b"), lit(1L).as("hit"))
-    // counted dispatch: the found-pair artifact is O(near-dups) and
-    // already materialized (memoized), so counting it is a cheap scan;
-    // broadcasting it below the bound keeps the O(N²/2) exact side from
-    // shuffling just to meet a thin pair table
-    val foundSide =
-      if (found.count() <= graft.vec.Lsh.NODE_BCAST_MAX_ROWS) broadcast(found)
-      else found.hint("SHUFFLE_HASH")
+    // the found-pair artifact is O(near-dups) and already materialized
+    // (memoized), so counting it is a cheap scan; broadcasting it keeps
+    // the O(N²/2) exact side from shuffling just to meet a thin pair table
     exact
-      .join(foundSide, Seq("id_a", "id_b"), "left")
+      .join(Joins.small(found, found.count()), Seq("id_a", "id_b"), "left")
       .selectExpr(
         "CAST(round(cos * 10000.0D) AS BIGINT) div 1000 AS band",
         "coalesce(hit, 0L) AS hit")
@@ -610,27 +606,20 @@ object DedupQueries {
     // candidate set stays O(n·cap), never O(hottest²). Oracle twin:
     // duckTieredCappedCtes' QUALIFY window.
     val bucketed = graft.vec.Lsh.capTieredBuckets(rawBucketed)
-    // COUNTED join dispatch (d15's size-adaptive discipline, extended to
-    // the LSH family): below the bound the node-sized sides BROADCAST,
-    // so the multi-million-row candidate stream never shuffles at all —
-    // the pre-r9 shape exchanged it once per hinted SHUFFLE_HASH join
-    // (by bucket key, then by id_a, then by id_b). Above the bound the
-    // builds stay SHUFFLE_HASH: thin per-partition hash tables at any
-    // corpus size, never the SortMergeJoin the planner's stats flipped
-    // to at 100× (candidate-mass sorts that spill, STRESS_r09).
-    def small(df: DataFrame): DataFrame =
-      if (n <= graft.vec.Lsh.NODE_BCAST_MAX_ROWS) broadcast(df)
-      else df.hint("SHUFFLE_HASH")
-    val cand = bucketed.as("x").join(small(bucketed).as("y"),
+    // the node-sized sides go through Joins.small, so below its bound the
+    // multi-million-row candidate stream never shuffles at all (the
+    // pre-r9 shape exchanged it once per join: by bucket key, then by
+    // id_a, then by id_b)
+    val cand = bucketed.as("x").join(Joins.small(bucketed, n).as("y"),
         col("x.tbl") === col("y.tbl") && col("x.bucket") === col("y.bucket") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
       .distinct()
     cand
-      .join(small(embC.select(col("vec_id").as("id_a"), col("embedding").as("ea"))),
-        "id_a")
-      .join(small(embC.select(col("vec_id").as("id_b"), col("embedding").as("eb"))),
-        "id_b")
+      .join(Joins.small(
+        embC.select(col("vec_id").as("id_a"), col("embedding").as("ea")), n), "id_a")
+      .join(Joins.small(
+        embC.select(col("vec_id").as("id_b"), col("embedding").as("eb")), n), "id_b")
       .select(col("id_a"), col("id_b"),
         round(graft.vec.VectorOps.cosineColsNative(col("ea"), col("eb")), 4)
           .as("cos"))
@@ -906,13 +895,9 @@ object DedupQueries {
     // tiny — only boilerplate shingles exceed it)
     val capped = spanOccurrences(corpus).cache()
     val nCapped = capped.count() // materialize before the self-join (no build race)
-    // counted dispatch (d15's discipline): thin (doc_id, pos, h) rows —
-    // broadcast one self-join side below the bound, SHUFFLE_HASH above
-    // (the default SortMergeJoin sorted both occurrence branches)
-    val cappedY =
-      if (nCapped <= graft.vec.Lsh.NODE_BCAST_MAX_ROWS) broadcast(capped.as("y"))
-      else capped.as("y").hint("SHUFFLE_HASH")
-    val matches = capped.as("x").join(cappedY,
+    // thin (doc_id, pos, h) rows; the default SortMergeJoin sorted both
+    // occurrence branches
+    val matches = capped.as("x").join(Joins.small(capped.as("y"), nCapped),
         col("x.h") === col("y.h") && col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("x.pos").as("pos_a"),
         col("y.doc_id").as("doc_b"), col("y.pos").as("pos_b"))
@@ -951,18 +936,12 @@ object DedupQueries {
     val pairs = d02Pairs(s, d)
     val sigs = corpus.select(col("doc_id"), sigUdf(col("text")).as("sig"))
       .cache()
-    val nSigs = sigs.count()
-    // counted dispatch (d15's discipline): the signature table is
-    // corpus-sized but 136 B/row — broadcast below the bound so the
-    // pair stream never exchanges; shuffle-hash above it
-    def sigSide(df: DataFrame): DataFrame =
-      if (nSigs <= graft.vec.Lsh.NODE_BCAST_MAX_ROWS) broadcast(df)
-      else df.hint("shuffle_hash")
+    val nSigs = sigs.count() // corpus-sized but 136 B/row
     val est = pairs
-      .join(sigSide(sigs.select(col("doc_id").as("doc_a"), col("sig").as("sa"))),
-        "doc_a")
-      .join(sigSide(sigs.select(col("doc_id").as("doc_b"), col("sig").as("sb"))),
-        "doc_b")
+      .join(Joins.small(
+        sigs.select(col("doc_id").as("doc_a"), col("sig").as("sa")), nSigs), "doc_a")
+      .join(Joins.small(
+        sigs.select(col("doc_id").as("doc_b"), col("sig").as("sb")), nSigs), "doc_b")
       .selectExpr("doc_a", "doc_b",
         s"CAST(round(($estJacSpark) * 1000.0D) AS BIGINT) AS est_pm")
     val pairDocs = pairs.select(col("doc_a").as("doc_id"))
@@ -974,26 +953,23 @@ object DedupQueries {
       .cache()
     occ.count()
     val sizes = occ.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
-    // the pair table and the pair-doc size census are O(near-dups):
-    // broadcast them below the bound (counted — the pair artifact is
-    // already materialized) so the corpus-sized shingle stream exchanges
-    // once (the doc_b,h equi-join) instead of four times
+    // the pair table and the pair-doc size census are O(near-dups)
+    // (counted — the pair artifact is already materialized): below the
+    // bound the corpus-sized shingle stream exchanges once (the doc_b,h
+    // equi-join) instead of four times
     val nPairs = pairs.count()
-    def pairSide(df: DataFrame): DataFrame =
-      if (nPairs <= graft.vec.Lsh.NODE_BCAST_MAX_ROWS) broadcast(df)
-      else df.hint("shuffle_hash")
     val inter = occ.select(col("doc_id").as("doc_a"), col("h"))
-      .join(pairSide(pairs.select(col("doc_a"), col("doc_b"))), "doc_a")
+      .join(Joins.small(pairs.select(col("doc_a"), col("doc_b")), nPairs), "doc_a")
       .join(occ.select(col("doc_id").as("doc_b"), col("h"))
         .hint("shuffle_hash"), Seq("doc_b", "h"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
     est
-      .join(pairSide(inter), Seq("doc_a", "doc_b"), "left")
+      .join(Joins.small(inter, nPairs), Seq("doc_a", "doc_b"), "left")
       .na.fill(0L, Seq("inter"))
-      .join(pairSide(sizes.select(col("doc_id").as("doc_a"), col("nsh").as("na"))),
-        "doc_a")
-      .join(pairSide(sizes.select(col("doc_id").as("doc_b"), col("nsh").as("nb"))),
-        "doc_b")
+      .join(Joins.small(
+        sizes.select(col("doc_id").as("doc_a"), col("nsh").as("na")), nPairs), "doc_a")
+      .join(Joins.small(
+        sizes.select(col("doc_id").as("doc_b"), col("nsh").as("nb")), nPairs), "doc_b")
       .selectExpr("est_pm div 100 AS band", "est_pm",
         "CAST(inter * 1000 div (na + nb - inter) AS BIGINT) AS exact_pm")
       .selectExpr("band", "est_pm", "exact_pm",
@@ -1384,7 +1360,7 @@ object DedupQueries {
     * `levenshtein(a, b, k)` running the banded O(len·k) DP with early
     * abandon (returns −1 past k) — the accepted set and its lev values
     * are unchanged (measured 34 s → ~4 s at sf0.1). */
-  private def snmPass(keyed: DataFrame, textSide: DataFrame => DataFrame): DataFrame = {
+  private def snmPass(keyed: DataFrame, nDocs: Long): DataFrame = {
     // the window sorts THIN rows — (id, 24-char key, length) — and the
     // document bodies are re-attached BY ID only for pairs surviving the
     // |Δlen| gate (guide §2.3/§8: shuffle keys and metadata, move the
@@ -1414,9 +1390,9 @@ object DedupQueries {
       .repartition(col("doc_id"), col("nid"))
     val texts = keyed.select(col("doc_id"), col("text"))
     cands
-      .join(textSide(texts), "doc_id")
-      .join(textSide(texts.select(col("doc_id").as("nid"), col("text").as("ntext"))),
-        "nid")
+      .join(Joins.small(texts, nDocs), "doc_id")
+      .join(Joins.small(
+        texts.select(col("doc_id").as("nid"), col("text").as("ntext")), nDocs), "nid")
       .select(expr("least(doc_id, nid)").as("doc_a"),
         expr("greatest(doc_id, nid)").as("doc_b"),
         levThresholdUdf(col("text"), col("ntext")).as("lev"))
@@ -1480,16 +1456,10 @@ object DedupQueries {
         "substring(skel, 1, 24) AS fkey",
         "substring(reverse(skel), 1, 24) AS rkey")
       .cache()
-    val nDocs = skeleton.count()
-    // counted dispatch for the text re-attach joins (d15's discipline):
-    // the text table broadcasts below the bound, shuffle-hashes above
-    // (corpus-sized at 100 TB)
-    def textSide(df: DataFrame): DataFrame =
-      if (nDocs <= graft.vec.Lsh.NODE_BCAST_MAX_ROWS) broadcast(df)
-      else df.hint("SHUFFLE_HASH")
+    val nDocs = skeleton.count() // sizes the text re-attach joins
     val fwd = skeleton.selectExpr("doc_id", "text", "fkey AS skey")
     val rev = skeleton.selectExpr("doc_id", "text", "rkey AS skey")
-    snmPass(fwd, textSide).unionByName(snmPass(rev, textSide))
+    snmPass(fwd, nDocs).unionByName(snmPass(rev, nDocs))
       .distinct()
       .orderBy(col("doc_a"), col("doc_b"))
   }

@@ -603,22 +603,16 @@ object TextQueries {
     // the same FixedLog table the SQL fragment splices (the scalar-
     // subquery shape; a broadcast cross join of the 1-row total would
     // plan the BroadcastNestedLoopJoin the global plan audit forbids).
-    // The SAME action also counts the vocab rows for the counted join
-    // dispatch below (d15's discipline, VERDICT r09 next-#5): the
-    // scaladoc's "broadcasts at benchmark scale" was aspirational — the
+    // The SAME action also counts the vocab rows for Joins.small: the
     // stats-less aggregate subtree made the planner sort-merge the
-    // surprisal join; the counted broadcast makes it actual and keeps
-    // the corpus-sized doc-term stream from exchanging by term.
+    // surprisal join (VERDICT r09 next-#5).
     val totRow = vocab.agg(sum(col("tf")), count(lit(1))).head()
     val totalCb = FixedLog.log2Cb(totRow.getLong(0))
     val nVocab = totRow.getLong(1)
     val surp = vocab
       .selectExpr("term",
         s"CAST(${totalCb}L - ${FixedLog.sparkLog2Cb("tf")} AS BIGINT) AS surp_cb")
-    val surpSide =
-      if (nVocab <= graft.vec.Lsh.NODE_BCAST_MAX_ROWS) broadcast(surp)
-      else surp.hint("SHUFFLE_HASH")
-    docTerm.join(surpSide, "term")
+    docTerm.join(Joins.small(surp, nVocab), "term")
       .groupBy(col("doc_id"))
       .agg(sum(col("k") * col("surp_cb")).as("sum_cb"), sum(col("k")).as("n_tokens"))
       .selectExpr("doc_id", "n_tokens",

@@ -51,16 +51,6 @@ object Lsh {
     * untouched and only degenerate collision clusters bind. */
   val TIER_BUCKET_CAP: Long = 4 * TARGET_BUCKET
 
-  /** Broadcast bound for the NODE-SIZED side tables of the LSH candidate
-    * pipelines (d06/n09): bucket rows (≤ NUM_TABLES thin rows per
-    * vector) and the id→embedding side (≤ ~256 B/row at dim 64-512).
-    * Below it these sides broadcast (≲ 50-100 MB built relation) and the
-    * candidate stream — the BIG side, O(n·bucket) rows — never
-    * exchanges; above it the joins fall back to SHUFFLE_HASH builds,
-    * which stay thin per partition at any corpus size. Counted against
-    * the actual corpus row count, never assumed (the d15/d16 lesson). */
-  val NODE_BCAST_MAX_ROWS = 200000L
-
   /** The sizing rule as an integer threshold ladder — smallest
     * k ∈ [BITS, MAX_BITS] with target·2ᵏ ≥ n (i.e. mean bucket ≤
     * target) — NOT a floating log: `ceil(log(n/B)/log 2)` computed as a

@@ -532,10 +532,11 @@ class EngineSpec extends SparkSpec {
     store.initFrom(spark, s"$sf/embeddings.parquet")
     val artDir = java.nio.file.Files
       .createTempDirectory("graft-engine-ann-idx").toString + "/idx"
-    // params sized for the 500-row spec corpus (measured over the grid
-    // in graft.tools.AnnGrid: this point gives mean recall 0.925 / min
-    // 0.667 — the synthetic embeddings are near-random in 64-dim, the
-    // hard case for IVF locality; a deployment retunes per corpus)
+    // params sized for the 500-row spec corpus (measured over a
+    // (cells, nprobe, m, coarseK) grid: this point gives mean recall
+    // 0.925 / min 0.667 — the synthetic embeddings are near-random in
+    // 64-dim, the hard case for IVF locality; a deployment retunes per
+    // corpus)
     val params = RClipEngine.AnnServing(
       cells = 8, nprobe = 6, m = 16, coarseK = 192,
       artifactPath = Some(artDir))

@@ -171,6 +171,34 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  test("Joins.small: broadcast at the bound, shuffle-hash one row above " +
+    "it, never sort-merge, before and after AQE re-planning") {
+    // (initial executedPlan, final adaptive plan after collect())
+    def plans(rows: Long): (String, String) = {
+      val df = spark.range(100).toDF("id")
+        .join(Joins.small(spark.range(100).toDF("id"), rows), "id")
+      val initial = df.queryExecution.executedPlan.toString
+      df.collect()
+      val fin = df.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          assert(a.isFinalPlan, a.toString)
+          a.executedPlan.toString
+        case p => p.toString
+      }
+      (initial, fin)
+    }
+    val (atInit, atFinal) = plans(Joins.BroadcastMaxRows)
+    for (p <- Seq(atInit, atFinal)) {
+      assert(p.contains("BroadcastHashJoin"), p)
+      assert(!p.contains("SortMergeJoin"), p)
+    }
+    val (overInit, overFinal) = plans(Joins.BroadcastMaxRows + 1)
+    for (p <- Seq(overInit, overFinal)) {
+      assert(p.contains("ShuffledHashJoin"), p)
+      assert(!p.contains("SortMergeJoin") && !p.contains("BroadcastHashJoin"), p)
+    }
+  }
+
   test("e07 as-of: type filters pushed to parquet, ONE user_id shuffle " +
     "feeds the window") {
     val p = planOf(EventQueries.e07_asof_join)
