@@ -26,9 +26,10 @@ final case class ResizedBytes(bytes: Array[Byte]) extends Thumb
   * State model: the images table lives in a [[SnapshotStore]]; the active
   * view (deleted rows filtered out) is cached in memory after first
   * action — the Spark analog of the reference's startup scan + dense
-  * matrix (`rclip_server.py:59-66`). Mutations write a new snapshot and
-  * refresh the cache (the reference's unreachable re-init at `:235` done
-  * right).
+  * matrix (`rclip_server.py:59-66`). A censor commits a deletion set and
+  * applies it over the cached base view; dedup and upsert write a new
+  * snapshot and refresh the cache (the reference's unreachable re-init at
+  * `:235` done right).
   *
   * Scale: the scored scan is embarrassingly parallel over cached
   * partitions; top-k is TakeOrderedAndProject (per-partition heap,
@@ -58,7 +59,8 @@ final class RClipEngine(
 
   // ---------------------------------------------------------------- state
 
-  @volatile private var activeDf: DataFrame = loadActive()
+  @volatile private var view: RClipEngine.View = loadActive()
+  private def activeDf: DataFrame = view.active
   @volatile private var statsCache: Option[(Array[Double], Array[Double])] = None
   // serving-index state machines (VERDICT r08 next-#3): builds run OUTSIDE
   // the engine monitor and CAS their result in, so a corpus-sized index
@@ -75,15 +77,16 @@ final class RClipEngine(
       RClipEngine.AnnUnbuilt)
   private val buildTokens = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  private def hasDeleted = store.read(spark).columns.contains("deleted")
-
-  /** Scan + soft-delete filter (S1/P2): `deleted IS NULL OR NOT deleted`,
-    * exact three-valued logic, plus the reference's optional parameterized
-    * `filepath LIKE` scan restriction (`rclip_server.py:206-212`) — a
-    * plain Catalyst predicate, so prefix patterns push down to the scan as
-    * StringStartsWith. Requires a `filepath` column when set. */
-  private def loadActive(): DataFrame = {
-    val raw = store.read(spark)
+  /** Scan + soft-delete filter (S1/P2) of the newest snapshot's BASE data
+    * version: `deleted IS NULL OR NOT deleted`, exact three-valued logic,
+    * plus the reference's optional parameterized `filepath LIKE` scan
+    * restriction (`rclip_server.py:206-212`) — a plain Catalyst predicate,
+    * so prefix patterns push down to the scan as StringStartsWith.
+    * Requires a `filepath` column when set. Only this base view is cached;
+    * the version's deletion set is applied on top of it ([[viewOf]]), so a
+    * censor re-points the view without dropping the cache. */
+  private def loadActive(): RClipEngine.View = {
+    val (raw, version) = store.readBase(spark)
     // S1 BLOB variant: the reference stores vectors as BLOBs of
     // little-endian float32 and decodes at scan (`rclip_server.py:215`);
     // a BinaryType vector column gets the same treatment via the codegen
@@ -97,8 +100,15 @@ final class RClipEngine(
         df.filter(col("deleted").isNull || col("deleted") === false)
       else df
     val scoped = pathLike.fold(live)(p => live.filter(col("filepath").like(p)))
-    scoped.cache()
+    viewOf(version.base, scoped.cache(), version.deletedIds)
   }
+
+  /** The cached base view minus the deleted ids. A null id is kept, as
+    * [[SnapshotStore.markDeleted]]'s fold keeps it. */
+  private def viewOf(base: String, cached: DataFrame, deleted: Set[Long]): RClipEngine.View =
+    RClipEngine.View(base, cached, deleted,
+      if (deleted.isEmpty) cached
+      else cached.filter(col(idCol).isNull || !col(idCol).isin(deleted.toSeq.sorted: _*)))
 
   /** Live (non-deleted) rows, cached. */
   def images: DataFrame = activeDf
@@ -110,8 +120,8 @@ final class RClipEngine(
     * index build: its completion CAS (Building(token) → Built) can no
     * longer match, so a pre-mutation index never installs. */
   def reload(): Unit = synchronized {
-    activeDf.unpersist()
-    activeDf = loadActive()
+    view.cached.unpersist()
+    view = loadActive()
     statsCache = None
     fastCache.set(RClipEngine.FastUnbuilt)
     annCache.set(RClipEngine.AnnUnbuilt)
@@ -209,7 +219,8 @@ final class RClipEngine(
     * — with BIT-IDENTICAL results (same index-order Double dot, same
     * HALF_UP 4-dp round, same (score DESC, id ASC) cut; EngineSpec pins
     * fast == distributed on the real corpus). Above the cap: the
-    * distributed path, unchanged. Mutations invalidate the matrix via
+    * distributed path, unchanged. A censor drops the censored rows from
+    * the matrix ([[censor]]); other mutations invalidate it via
     * [[reload]] like every other engine cache. */
   def search(q: String, num: Int = 12): DataFrame =
     resolver.resolve(q) match {
@@ -350,7 +361,7 @@ final class RClipEngine(
     *
     * Built by [[warm]] (or lazily on first above-cap search when
     * `buildOnFirstSearch` is set) from the active snapshot; mutations
-    * invalidate it via [[reload]] like every other engine cache — and
+    * invalidate it (censor directly, the others via [[reload]]) — and
     * the on-disk artifact's `_graft_built_from` marker stops matching
     * the new store version — so a censored row can never be served from
     * a stale index. With `artifactPath` set, the built index is SAVED
@@ -790,19 +801,47 @@ final class RClipEngine(
   // server's workers, cannot lose an update or race to the same version.
 
   /** M1 — censor: soft-delete by id, gated by key (`rclip_server.py:
-    * 423-428`). Snapshot rewrite + cache refresh. */
+    * 423-428`). Commits the deletion set plus `id` as a deletes-only
+    * version (a few bytes, no Spark job) and applies it over the cached
+    * base view: the cache stays, and a built RAM matrix is patched rather
+    * than re-collected. A set that would grow past
+    * [[SnapshotStore.MaxDeletes]] is compacted instead: the full snapshot
+    * rewrite plus [[reload]]. So is a store whose base moved behind the
+    * engine's back. */
   def censor(id: Long, key: String): Boolean =
     if (!censorKey.contains(key)) false
     else synchronized {
-      val base = store.read(spark)
-      val withDel =
-        if (base.columns.contains("deleted")) base
-        else base.withColumn("deleted", lit(null).cast("boolean"))
-      store.write(withDel.withColumn("deleted",
-        when(col(idCol) === id, lit(true)).otherwise(col("deleted"))))
-      reload()
+      val pending = store.head.fold(Set.empty[Long])(_.deletedIds) + id
+      if (pending.size > SnapshotStore.MaxDeletes) {
+        store.write(SnapshotStore.markDeleted(store.read(spark),
+          SnapshotStore.Deletes(idCol, Set(id))))
+        reload()
+      } else {
+        val v = store.delete(idCol, Seq(id))
+        if (v.base == view.base) applyDeletes(v.deletedIds) else reload()
+      }
       true
     }
+
+  /** Re-point the view at the same cached base with the grown set
+    * `deleted` (no unpersist, no job) and drop what the set invalidates:
+    * stats, the ANN index (rebuilt by the next [[warm]]) and the RAM
+    * matrix rows of the newly deleted ids. A built matrix is replaced by a
+    * row-filtered copy through a CAS; any other fast state becomes
+    * Unbuilt, which also dooms an in-flight build. The view is replaced
+    * first, so a build claimed after the reset collects the new view. */
+  private def applyDeletes(deleted: Set[Long]): Unit = {
+    val gone = deleted -- view.deleted
+    view = viewOf(view.base, view.cached, deleted)
+    statsCache = None
+    annCache.set(RClipEngine.AnnUnbuilt)
+    val patched = fastCache.get() match {
+      case b @ RClipEngine.FastBuilt(idx) =>
+        fastCache.compareAndSet(b, RClipEngine.FastBuilt(idx.without(gone)))
+      case _ => false
+    }
+    if (!patched) fastCache.set(RClipEngine.FastUnbuilt)
+  }
 
   /** M2/A6 — dedup-by-embedding: among rows sharing an identical vector,
     * keep the smallest id, soft-delete the rest. The reference's intended
@@ -884,7 +923,20 @@ object RClipEngine {
   val FastPathMaxRows: Long = 1L << 20
 
   /** Driver-resident scoring matrix for the serving fast path. */
-  final case class FastIndex(ids: Array[Long], vecs: Array[Array[Float]])
+  final case class FastIndex(ids: Array[Long], vecs: Array[Array[Float]]) {
+    /** A copy without the rows whose id is in `gone`, in the same row
+      * order; the vectors are shared, not copied. */
+    def without(gone: Set[Long]): FastIndex = {
+      val keep = Array.range(0, ids.length).filterNot(r => gone(ids(r)))
+      FastIndex(keep.map(ids), keep.map(vecs))
+    }
+  }
+
+  /** The engine's serving view: the cached live rows of data version
+    * `base`, the ids deleted over it, and `active` = `cached` without
+    * those ids. */
+  private final case class View(base: String, cached: DataFrame,
+      deleted: Set[Long], active: DataFrame)
 
   sealed trait FastState
   case object FastUnbuilt extends FastState

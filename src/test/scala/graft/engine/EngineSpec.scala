@@ -522,6 +522,192 @@ class EngineSpec extends SparkSpec {
     assert(store.read(spark).count() == 3)
   }
 
+  /** Spark jobs that `body` submits on this thread, counted up to a
+    * sentinel job: listener events arrive in order, so once the sentinel
+    * is seen every earlier job has been counted. */
+  private def sparkJobs(body: => Unit): Seq[String] = {
+    val group = s"jobs-${System.nanoTime()}"
+    val seen = new java.util.concurrent.LinkedBlockingQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.add(Option(p.getProperty("spark.job.description")).getOrElse("")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup(group, "counted")
+      body
+      spark.sparkContext.setJobDescription("sentinel")
+      spark.range(1).count()
+      val jobs = Seq.newBuilder[String]
+      var d = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      while (d != null && d != "sentinel") {
+        jobs += d; d = seen.poll(60, java.util.concurrent.TimeUnit.SECONDS)
+      }
+      assert(d == "sentinel", "the sentinel job never reached the listener")
+      jobs.result()
+    } finally {
+      spark.sparkContext.clearJobGroup()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  private def fileNames(dir: String): Seq[String] = {
+    val st = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try st.toArray.map(_.toString.split('/').last).sorted.toSeq finally st.close()
+  }
+
+  test("censor commits a deletion set: over a built RAM matrix 3 censors run " +
+    "no Spark job and leave the matrix built, and fast ≡ distributed holds") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-censor-cheap").toString
+    val store = new SnapshotStore(dir)
+    store.initFrom(spark, s"$sf/embeddings.parquet")
+    val fast = new RClipEngine(spark, store, new DeterministicEmbedder(64),
+      censorKey = Some("k"))
+    val dist = new RClipEngine(spark, store, new DeterministicEmbedder(64),
+      fastPathMaxRows = 0L)
+    def rows(e: RClipEngine, q: String, k: Int) =
+      e.search(q, k).collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    // both engines resolve the queries, and so derive their label-centroid
+    // word tables, before the censors
+    val queries = Seq("label5 -label6", "label0", "label3 2.0*label7",
+      "{\"random_seed\": 3}")
+    for (q <- queries) assert(rows(fast, q, 600) == rows(dist, q, 600), q)
+    val n0 = fast.count()
+    val victims = fast.searchRows("label5", 3).map(_._1)
+    assert(victims.length == 3)
+    assert(fast.fastState.isInstanceOf[RClipEngine.FastBuilt])
+    val jobs = sparkJobs(victims.foreach(id => assert(fast.censor(id, "k"))))
+    assert(jobs.isEmpty, s"censor ran Spark jobs: $jobs")
+    fast.fastState match {
+      case RClipEngine.FastBuilt(idx) =>
+        assert(idx.ids.length == n0 - 3)
+        assert(!idx.ids.exists(victims.contains))
+      case other => fail(s"censor dropped the RAM matrix: $other")
+    }
+    // three deletes-only versions over the one base, metadata files only
+    val head = store.head.get
+    assert(head.dir.endsWith("v00004") && head.base.endsWith("v00001"))
+    assert(head.deletedIds == victims.toSet)
+    assert(fileNames(head.dir) == Seq("_BASE", "_DELETES", "_SUCCESS"))
+    dist.reload()
+    for (q <- queries) assert(rows(fast, q, 600) == rows(dist, q, 600), q)
+    assert(rows(fast, "label5", 600).length == n0 - 3)
+    assert(!rows(fast, "label5", 600).exists(r => victims.contains(r._1)))
+    assert(fast.count() == n0 - 3 && victims.forall(fast.byId(_).isEmpty))
+  }
+
+  test("SnapshotStore: prune keeps every base a kept deletes-only version " +
+    "reads") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-prune-base").toString
+    val store = new SnapshotStore(dir)
+    store.write(spark.read.parquet(s"$sf/embeddings.parquet").limit(20)) // v1
+    val e = new RClipEngine(spark, store, new DeterministicEmbedder(64),
+      censorKey = Some("k"))
+    import spark.implicits._
+    val ids = e.images.select(col("vec_id")).as[Long].collect().sorted
+    ids.take(4).foreach(id => assert(e.censor(id, "k"))) // v2..v5
+    assert(store.prune(keep = 2) == 2)
+    assert(fileNames(dir) == Seq("v00001", "v00004", "v00005"))
+    val live = store.read(spark)
+      .filter(col("deleted").isNull || col("deleted") === false)
+      .select(col("vec_id")).as[Long].collect().sorted.toSeq
+    assert(live == ids.drop(4).toSeq)
+    assert(new RClipEngine(spark, store, new DeterministicEmbedder(64)).count() == 16)
+  }
+
+  test("SnapshotStore: each step of a deletes-only commit is crash-safe, and " +
+    "a committed but torn deletion set fails loudly, naming the path") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    def tiny(): (SnapshotStore, String) = {
+      val store = new SnapshotStore(
+        Files.createTempDirectory("graft-deletes-torn").toString)
+      store.write(spark.range(6).toDF()) // v1: ids 0..5
+      (store, store.delete("id", Seq(1L, 2L)).dir) // v2
+    }
+    def deleted(s: SnapshotStore) = s.read(spark).filter(col("deleted") === true)
+      .select(col("id")).as[Long].collect().toSet
+    val (store, _) = tiny()
+    assert(deleted(store) == Set(1L, 2L))
+    // v3 crashed before each of its steps completed: invisible, v2 served
+    val v3 = store.delete("id", Seq(3L)).dir
+    assert(deleted(store) == Set(1L, 2L, 3L))
+    for (step <- Seq("_SUCCESS", "_DELETES", "_BASE")) {
+      Files.delete(Paths.get(v3, step))
+      assert(store.latestVersion.contains(2), step)
+      assert(deleted(store) == Set(1L, 2L), step)
+    }
+    // both kinds of commit number past the torn deletes-only dir
+    assert(store.delete("id", Seq(4L)).dir.endsWith("v00004"))
+    assert(deleted(store) == Set(1L, 2L, 4L))
+    assert(store.write(spark.range(3).toDF()).endsWith("v00005"))
+    // committed (has _SUCCESS) but torn: read and a fresh engine throw
+    def loud(s: SnapshotStore, path: String): Unit = {
+      val viaRead = intercept[IllegalStateException](s.read(spark))
+      assert(viaRead.getMessage.contains(path), viaRead.getMessage)
+      val viaEngine = intercept[IllegalStateException](
+        new RClipEngine(spark, s, new DeterministicEmbedder(64)))
+      assert(viaEngine.getMessage.contains(path), viaEngine.getMessage)
+    }
+    val (missing, m2) = tiny()
+    Files.delete(Paths.get(m2, "_DELETES"))
+    loud(missing, Paths.get(m2, "_DELETES").toString)
+    val (short, s2) = tiny()
+    val dels = Paths.get(s2, "_DELETES")
+    val bytes = Files.readAllBytes(dels)
+    Files.write(dels, bytes.take(bytes.length - 8)) // one id short of its count
+    loud(short, dels.toString)
+    val (noBase, b2) = tiny()
+    Files.writeString(Paths.get(b2, "_BASE"), "v00009")
+    loud(noBase, Paths.get(b2, "_BASE").toString)
+  }
+
+  test("pending deletes survive every full write, and a censor past " +
+    "MaxDeletes compacts into a data version") {
+    import java.nio.file.{Files, Paths}
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-deletes-fold").toString
+    val store = new SnapshotStore(dir)
+    val base = spark.read.parquet(s"$sf/embeddings.parquet").limit(20)
+    store.write(base)
+    val e = new RClipEngine(spark, store, new DeterministicEmbedder(64),
+      censorKey = Some("k"))
+    val ids = e.images.select(col("vec_id")).as[Long].collect().sorted
+    def markedDeleted = store.read(spark).filter(col("deleted") === true)
+      .select(col("vec_id")).as[Long].collect().toSet
+    def served(eng: RClipEngine) =
+      eng.images.select(col("vec_id")).as[Long].collect().toSet
+    def fresh() = new RClipEngine(spark, store, new DeterministicEmbedder(64))
+    val (x, y) = (ids(0), ids(1))
+    assert(e.censor(x, "k"))
+    assert(markedDeleted == Set(x))
+    assert(!served(fresh()).contains(x))
+    // upsert of other rows folds the pending set into its full write
+    e.upsert(base.filter(col("vec_id") === ids(2)).withColumn("label", lit(999)), "vec_id")
+    assert(store.head.get.deletes.isEmpty)
+    assert(markedDeleted == Set(x) && !served(e).contains(x) && e.count() == 19)
+    // so does dedup
+    assert(e.censor(y, "k"))
+    e.dedupByEmbedding()
+    assert(store.head.get.deletes.isEmpty)
+    assert(Set(x, y).subsetOf(markedDeleted))
+    assert(served(e).intersect(Set(x, y)).isEmpty && served(fresh()).intersect(Set(x, y)).isEmpty)
+    val n = e.count()
+    // a full set (3 live ids + absent ones), committed in one store call...
+    val full = ids.slice(3, 6).toSeq ++
+      (1L to SnapshotStore.MaxDeletes - 3L).map(_ + 1000000L)
+    assert(store.delete("vec_id", full).deletedIds.size == SnapshotStore.MaxDeletes)
+    // ...so the next censor compacts: a data version, live count right
+    assert(e.censor(ids(10), "k"))
+    val head = store.head.get
+    assert(head.deletes.isEmpty && head.base == head.dir)
+    assert(!Files.exists(Paths.get(head.dir, "_BASE")))
+    assert(store.read(spark)
+      .filter(col("deleted").isNull || col("deleted") === false).count() == n - 4)
+    assert(e.count() == n - 4 && fresh().count() == n - 4)
+  }
+
   test("above-cap ANN serving (VERDICT r07 next-#2): the opt-in IVF-PQ " +
     "regime holds a recall@12 floor vs brute, returns EXACT brute-path " +
     "scores for every id it serves, probes the persisted artifact with " +

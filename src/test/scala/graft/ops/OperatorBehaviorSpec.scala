@@ -739,12 +739,37 @@ class OperatorBehaviorSpec extends SparkSpec {
 
   test("n09: k-NN graph matches a driver-side re-derivation of the " +
     "tiered-LSH candidates and their rounded-cosine top-3 ranking") {
-    import graft.vec.Lsh
     val got = AnnQueries.n09_knn_graph(spark, sf)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    val expected = n09Expected(sf)
+    assert(got.toSeq == expected)
+  }
 
-    // independent re-derivation (plain Scala, no Spark expressions)
+  test("n09: planted exact clones (the clone-group expansion) still match " +
+    "the driver-side re-derivation") {
+    val d = java.nio.file.Files.createTempDirectory("graft-n09-clones").toString
     val emb = spark.read.parquet(s"$sf/embeddings.parquet")
+    def clone(of: Long, as: Long) =
+      emb.filter(col("vec_id") === of).withColumn("vec_id", lit(as))
+    emb.unionByName(clone(10L, 100000L)).unionByName(clone(20L, 100001L))
+      .unionByName(clone(10L, 100002L))
+      .write.parquet(s"$d/embeddings.parquet")
+    val got = AnnQueries.n09_knn_graph(spark, d)
+      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getDouble(3)))
+    val expected = n09Expected(d)
+    // every clone ranks its group's other members first, at cosine 1
+    assert(expected.filter(r => r._1 == 10L && r._2 <= 2).map(r => (r._3, r._4)) ==
+      Seq((100000L, 1.0), (100002L, 1.0)))
+    assert(expected.exists(r => r._1 == 100001L && r._2 == 1 && r._3 == 20L && r._4 == 1.0))
+    assert(got.toSeq == expected)
+  }
+
+  /** n09's output re-derived independently (plain Scala, no Spark
+    * expressions): tiered-LSH candidate pairs, then each source's top 3
+    * by (rounded cosine DESC, neighbor ASC). */
+  private def n09Expected(d: String): Seq[(Long, Int, Long, Double)] = {
+    import graft.vec.Lsh
+    val emb = spark.read.parquet(s"$d/embeddings.parquet")
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
     val bits = Lsh.bitsForCount(emb.size.toLong)
@@ -781,7 +806,7 @@ class OperatorBehaviorSpec extends SparkSpec {
           .take(3).zipWithIndex
           .map { case ((nbr, c), i) => (src, i + 1, nbr, c) }
       }.sortBy(r => (r._1, r._2))
-    assert(got.toSeq == expected)
+    expected
   }
 
   test("n12: hybrid RRF fusion matches a driver-side re-derivation of " +

@@ -133,6 +133,39 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("Exchange"), s"façade scored scan must not shuffle:\n$p")
   }
 
+  test("engine façade after a censor: the distributed plan scans the cached " +
+    "base (InMemoryTableScan, no FileScan), with no shuffle and no UDF") {
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    val dir = java.nio.file.Files.createTempDirectory("graft-planspec-censor").toString
+    val store = new graft.engine.SnapshotStore(dir)
+    store.initFrom(spark, s"$sf/embeddings.parquet")
+    val engine = new graft.engine.RClipEngine(
+      spark, store, new graft.embed.DeterministicEmbedder(64),
+      censorKey = Some("k"), fastPathMaxRows = 0L)
+    // the scan nodes of the query itself (a cached relation's own plan
+    // hangs off InMemoryTableScan as an inner child, not a child)
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case _ => p +: p.children.flatMap(nodes)
+    }
+    def caches(p: SparkPlan) = nodes(p).collect {
+      case s: InMemoryTableScanExec => s.relation.cacheBuilder
+    }
+    val before = caches(engine.search("label5 -label6", 12).queryExecution.executedPlan)
+    assert(before.length == 1)
+    assert(engine.censor(7L, "k"))
+    val plan = engine.search("label5 -label6", 12).queryExecution.executedPlan
+    val p = plan.toString
+    // the very cache the pre-censor plan scanned, not a re-read of the store
+    assert(caches(plan).length == 1 && (caches(plan).head eq before.head), p)
+    assert(!nodes(plan).exists(_.isInstanceOf[FileSourceScanExec]), p)
+    assert(p.contains("TakeOrderedAndProject"), p)
+    assert(!p.contains("Exchange"), s"façade scored scan must not shuffle:\n$p")
+    assert(!p.contains("ScalaUDF"), p)
+  }
+
   test("v03 blob codec: decode∘encode stays one codegen scan, no UDF") {
     // (the query's global ORDER BY is presentation for the oracle compare
     // — the codec work itself all happens in the scan-side codegen stage)
