@@ -9,11 +9,7 @@ import org.apache.spark.sql.functions._
   * Methodology: every query runs once to warm the JVM/codegen/file-listing
   * caches, then the timed pass takes the best of 2 runs (steady-state; the
   * first-ever Spark job pays ~10s of JIT that says nothing about plan
-  * quality). A `micro` section compares the dot-product implementations
-  * (codegen Expression vs Scala UDF vs higher-order functions) on
-  * generated corpora, plus the compiled rolling-hash fingerprint — the
-  * evidence behind defaulting hot paths to codegen expressions and
-  * compiled UDF loops.
+  * quality).
   */
 object Bench {
 
@@ -283,17 +279,10 @@ object Bench {
 
     val results = artifactBuilds ++ qs.map { case (name, fn) => name -> timeBest(fn) }
 
-    // micros only on full runs — a subset run is a targeted measurement,
-    // and the kernel micros would just add a minute of co-tenant noise
-    val micro =
-      if (only.isDefined) Seq.empty
-      else microDot(spark) ++ microFingerprint(spark)
-
     val serving =
       if (only.isDefined) Seq.empty else microServing(spark, sfDir)
 
     val qJson = results.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
-    val mJson = micro.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val sJson = serving.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val (loadEnd, javaEnd) = machineState()
@@ -321,7 +310,7 @@ object Bench {
       System.err.println(
         f"[bench] HOST CONTENDED (steal $stealPct%.1f%%, empty-job cal " +
           f"$calStart%.3f/$calEnd%.3f s) — totals are dispatch-inflated; " +
-          "compare micros (cached-compute) across rounds, not totals")
+          "compare within-run ratios across rounds, not totals")
     val envJson =
       s"""{"load_start":$loadStart,"load_end":$loadEnd,""" +
         s""""other_java_start":$javaStart,"other_java_end":$javaEnd,""" +
@@ -335,7 +324,7 @@ object Bench {
       .map(_.toSeq.sorted.map(n => s""""$n"""").mkString("[", ",", "]"))
       .getOrElse("null")
     val record =
-      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qJson,"micro":$mJson,"serving":$sJson,"env":$envJson,"filter":$filterJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"unit":"sec","queries":$qJson,"serving":$sJson,"env":$envJson,"filter":$filterJson,"sf":"$sfDir"}"""
     // self-record to a file too (VERDICT r03 #2: BENCH_r03's stdout tail
     // was truncated mid-record, losing the total and 30 per-query rows —
     // the file copy makes driver-side capture loss unable to destroy the
@@ -475,145 +464,5 @@ object Bench {
   private def deleteRecursively(f: java.io.File): Unit = {
     Option(f.listFiles()).getOrElse(Array.empty).foreach(deleteRecursively)
     f.delete(); ()
-  }
-
-  /** Shared micro fixtures: ONE corpus recipe and ONE warmup+best-of-3
-    * harness for every micro — a methodology or data change edits one
-    * place, not a copy per micro (a missed copy silently benchmarks
-    * different data). Best-of-3 because a single GC/JIT spike can land
-    * on two consecutive runs of one column (observed once:
-    * dot512_codegen recorded 3.9 s at a 0.2 s steady state). */
-  private def genEmbCorpus(spark: SparkSession, rows: Int,
-      dim: Int): org.apache.spark.sql.DataFrame = {
-    val corpus = spark.range(rows)
-      .selectExpr("id",
-        s"transform(sequence(0, ${dim - 1}), j -> CAST(sin(id * 1.7 + j) AS FLOAT)) AS embedding")
-      .cache()
-    corpus.count() // materialize
-    corpus
-  }
-
-  private def bestOf3(spark: SparkSession, desc: String)(job: () => Unit): Double = {
-    spark.sparkContext.setJobDescription(desc)
-    job() // warmup
-    Seq.fill(3) {
-      val t0 = System.nanoTime(); job(); (System.nanoTime() - t0) / 1e9
-    }.min
-  }
-
-  /** The compiled rolling-hash fingerprint UDF (t04's rewrite, VERDICT
-    * r02 #3) over generated text, one O(n) pass per row. No interpreted
-    * higher-order-function twin is timed: the 3–30× gap is settled and
-    * recorded in README, and timing it cost 10.8–32 s per run. */
-  def microFingerprint(spark: SparkSession): Seq[(String, Double)] = {
-    val corpus = spark.range(100000)
-      .selectExpr("id",
-        "repeat(concat('w', CAST(id % 97 AS STRING), ' '), 40) AS text")
-      .cache()
-    corpus.count()
-    val udfCol = graft.ops.TextQueries.fpUdf(col("text"))
-    val out = Seq("fp_udf" ->
-      bestOf3(spark, "micro-fingerprint")(() => { corpus.select(sum(udfCol)).head(); () }))
-    corpus.unpersist()
-    out
-  }
-
-  /** Codegen vs UDF vs HOF dot product over generated cached corpora:
-    * 200k×64 (the testdata dim — mostly memory-bound, implementations
-    * within ~3×) and 25k×512 (the reference's CLIP dim — compute-bound,
-    * where the implementation gap is decisive). Re-measured under
-    * repetition for r02: ordering is stably codegen < udf < hof; the
-    * r01 inversion was co-tenant load. No d=512 UDF column: it swung
-    * 0.08–4.6 s across records, so it measured the host, not the UDF. */
-  def microDot(spark: SparkSession): Seq[(String, Double)] =
-    microDotAt(spark, 200000, 64, "dot") ++
-      microDotAt(spark, 25000, 512, "dot512", withUdf = false) ++
-      microQDot(spark, 200000, 64) ++
-      microPqAdc(spark, 200000, 64)
-
-  /** PQ ADC scan vs exact fp32 dot over the SAME cached corpus: the
-    * packed-code column (8 B/row) is scored by m shift-mask + LUT adds
-    * where the fp32 path streams 256 B/row through multiply-adds. With
-    * both inputs RAM-cached the per-row compute is comparable (measured
-    * ~10% apart at 200k×64 — cache-resident timing can't see the IO
-    * delta), so the micro pins that ADC costs ~the same per row; the
-    * 100 TB win is the 32× smaller scan footprint, which shows up as
-    * IO, shuffle, and memory-residency, not per-row arithmetic. */
-  def microPqAdc(spark: SparkSession, rows: Int, dim: Int): Seq[(String, Double)] = {
-    import graft.vec.VectorOps
-    val m = 16; val k = 16
-    val q = Array.tabulate(dim)(i => ((i % 7) - 3) / 8.0f)
-    val corpus = genEmbCorpus(spark, rows, dim)
-    // deterministic pseudo-codebook (bench-only: timing is independent
-    // of codebook quality) + its query LUT
-    val flatCb = Array.tabulate(m * k * (dim / m))(i => ((i * 37 % 19) - 9) / 10.0f)
-    val lut = graft.ann.PqIndex.lut(flatCb, m, k, q)
-    val codesDf = corpus
-      .select(col("id"),
-        VectorOps.pqEncodePacked(col("embedding"), flatCb, m, k).as("code"))
-      .cache()
-    codesDf.count()
-    val adc = codesDf.select(sum(VectorOps.pqAdcPacked(col("code"), lut, m, k)))
-    val fp32 = corpus.select(sum(VectorOps.dotQueryNative(col("embedding"), q)))
-    val out = Seq("pqadc_packed" -> adc, "pqadc_fp32dot" -> fp32).map {
-      case (name, df) =>
-        name -> bestOf3(spark, "micro-pq-adc")(() => { df.head(); () })
-    }
-    codesDf.unpersist(); corpus.unpersist()
-    out
-  }
-
-  /** Codegen vec_qdot vs an equivalent quantize-and-dot Scala UDF (the
-    * v06/n05 coarse kernel before it was promoted to an expression). */
-  def microQDot(spark: SparkSession, rows: Int, dim: Int): Seq[(String, Double)] = {
-    import graft.vec.VectorOps
-    val qq = Array.tabulate(dim)(i => (i % 255).toLong - 127L)
-    val corpus = genEmbCorpus(spark, rows, dim)
-    val codegen = VectorOps.qdotQueryNative(col("embedding"), qq)
-    val udfCol = udf { (v: Seq[Float]) =>
-      if (v == null) null
-      else {
-        var m = 0.0
-        v.foreach(x => m = math.max(m, math.abs(x.toDouble)))
-        if (m == 0.0) java.lang.Long.valueOf(0L)
-        else {
-          var s = 0L; var i = 0
-          val n = math.min(v.length, qq.length)
-          while (i < n) {
-            s += math.floor(v(i).toDouble * 127.0 / m + 0.5).toLong * qq(i)
-            i += 1
-          }
-          java.lang.Long.valueOf(s)
-        }
-      }
-    }.apply(col("embedding"))
-    val out = Seq("qdot_codegen" -> codegen, "qdot_udf" -> udfCol).map {
-      case (name, c) =>
-        name -> bestOf3(spark, "micro-qdot")(() => { corpus.select(sum(c)).head(); () })
-    }
-    corpus.unpersist()
-    out
-  }
-
-  def microDotAt(spark: SparkSession, rows: Int, dim: Int,
-      prefix: String, withUdf: Boolean = true): Seq[(String, Double)] = {
-    import graft.vec.VectorOps
-    val q = Array.tabulate(dim)(i => ((i % 7) - 3) / 8.0f)
-    val corpus = genEmbCorpus(spark, rows, dim)
-
-    val codegen = VectorOps.dotQueryNative(col("embedding"), q)
-    val udfCol = VectorOps.dotQuery(col("embedding"), q)
-    val qLit = q.map(x => s"CAST(${x.toDouble} AS FLOAT)").mkString("array(", ",", ")")
-    val hof = expr(
-      s"aggregate(zip_with(embedding, $qLit, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), 0.0D, (acc, v) -> acc + v)")
-
-    val cols = Seq(s"${prefix}_codegen" -> codegen) ++
-      (if (withUdf) Seq(s"${prefix}_udf" -> udfCol) else Nil) :+ (s"${prefix}_hof" -> hof)
-    val out = cols.map {
-      case (name, c) =>
-        name -> bestOf3(spark, "micro-dot")(() => { corpus.select(sum(c)).head(); () })
-    }
-    corpus.unpersist()
-    out
   }
 }

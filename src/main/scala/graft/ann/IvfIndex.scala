@@ -40,9 +40,6 @@ final class IvfIndex(
     idCol: String,
     vecCol: String) {
 
-  /** Nearest-centroid cell for a vector (max dot — spherical cells). */
-  def cellOf(v: Array[Float]): Int = IvfIndex.nearestCell(codebook, v)
-
   /** Cells ranked by closeness to `q`, first `nprobe`. */
   def probeCells(q: Array[Float], nprobe: Int): Seq[Int] =
     IvfIndex.probeCells(codebook, q, nprobe)

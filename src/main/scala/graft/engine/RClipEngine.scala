@@ -23,13 +23,21 @@ final case class ResizedBytes(bytes: Array[Byte]) extends Thumb
   * resolveEmbedding / textEmbedding, visualize, censor (M1), dedup (M2/A6),
   * upsert (S7), reload (M3), stats (A1–A4).
   *
-  * State model: the images table lives in a [[SnapshotStore]]; the active
-  * view (deleted rows filtered out) is cached in memory after first
-  * action — the Spark analog of the reference's startup scan + dense
-  * matrix (`rclip_server.py:59-66`). A censor commits a deletion set and
-  * applies it over the cached base view; dedup and upsert write a new
-  * snapshot and refresh the cache (the reference's unreachable re-init at
-  * `:235` done right).
+  * State model: the images table lives in a [[SnapshotStore]]; all the
+  * engine serves from is one immutable epoch in one `AtomicReference` (the
+  * reference's one startup scan + dense matrix, `rclip_server.py:59-66`):
+  * the cached live view of the newest base data version, the deletion set
+  * over it and the view without those ids, the stats, the RAM-matrix and
+  * ANN serving states, the word table and map, and a term resolver whose
+  * LRU lives and dies with the epoch. A request reads the epoch once and
+  * resolves, looks up and scores against it. Each mutation holds the
+  * engine monitor and sets the next epoch, keeping only what it leaves
+  * valid: a censor commits a deletion set over the same cached base and
+  * patches a built RAM matrix; dedup and upsert write a new snapshot and
+  * [[reload]]. The word table comes from the cached base view before the
+  * deletion set, so a censor keeps it and only a new base data version
+  * re-derives it (lazily). Builds and stats run off the monitor and
+  * install only into the generation they read.
   *
   * Scale: the scored scan is embarrassingly parallel over cached
   * partitions; top-k is TakeOrderedAndProject (per-partition heap,
@@ -51,6 +59,8 @@ final class RClipEngine(
     annServing: Option[RClipEngine.AnnServing] = None) extends StoredVectors {
 
   import spark.implicits._
+  import RClipEngine.{AnnBuilding, AnnBuilt, AnnDisabled, AnnState, AnnUnbuilt,
+    FastBuilding, FastBuilt, FastDisabled, FastIndex, FastState, FastUnbuilt}
 
   // all scoring below uses the codegen vec_dot expression (same plan shape
   // the oracle queries are PlanSpec-locked to); register for foreign
@@ -59,23 +69,102 @@ final class RClipEngine(
 
   // ---------------------------------------------------------------- state
 
-  @volatile private var view: RClipEngine.View = loadActive()
-  private def activeDf: DataFrame = view.active
-  @volatile private var statsCache: Option[(Array[Double], Array[Double])] = None
-  // serving-index state machines (VERDICT r08 next-#3): builds run OUTSIDE
-  // the engine monitor and CAS their result in, so a corpus-sized index
-  // build never head-of-line blocks censor/reload or other callers — a
-  // request arriving mid-build serves the fallback regime instead of
-  // waiting. Each in-flight build holds a UNIQUE Building token; reload()
-  // resetting the state to Unbuilt makes the stale builder's final CAS
-  // fail, so an index built from a superseded snapshot can never install.
-  private val fastCache =
-    new java.util.concurrent.atomic.AtomicReference[RClipEngine.FastState](
-      RClipEngine.FastUnbuilt)
-  private val annCache =
-    new java.util.concurrent.atomic.AtomicReference[RClipEngine.AnnState](
-      RClipEngine.AnnUnbuilt)
-  private val buildTokens = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** One serving state (see the class doc); `stats`, `fast` and `ann` are
+    * filled in by [[install]] within the same generation. */
+  private case class Epoch(
+      gen: Long,
+      base: String,
+      cached: DataFrame,
+      deleted: Set[Long],
+      active: DataFrame,
+      words: Words,
+      resolver: TermResolver,
+      stats: Option[(Array[Double], Array[Double])],
+      fast: FastState,
+      ann: AnnState) extends StoredVectors {
+
+    def resolve(q: String): Option[Array[Float]] = resolver.resolve(q, this)
+
+    /** From the RAM matrix when it is built (the first row with this id,
+      * in the collect order the Spark lookup's `headOption` also sees; no
+      * job), otherwise one Spark filter job. Never builds the matrix. */
+    def byId(id: Long): Option[Array[Float]] = fast match {
+      case FastBuilt(idx) =>
+        var r = 0
+        while (r < idx.ids.length && idx.ids(r) != id) r += 1
+        if (r == idx.ids.length) None else Some(idx.vecs(r).clone())
+      case _ =>
+        active.filter(col(idCol) === id).select(col(vecCol))
+          .as[Array[Float]].collect().headOption
+    }
+
+    def random(): Option[Array[Float]] =
+      active.select(col(vecCol)).orderBy(rand(seed)).limit(1)
+        .as[Array[Float]].collect().headOption
+  }
+
+  /** A word table and its driver map: the supplied table, or the
+    * per-label centroids of one base's cached live rows. Derived on first
+    * use and shared by every epoch over that base. */
+  private final class Words(source: => DataFrame) {
+    @volatile private var derived = false
+
+    lazy val table: DataFrame = {
+      derived = true
+      WordTable.lowercaseOnly(source).cache()
+    }
+
+    /** Bounded driver word map (VERDICT r03 #3): the reference keeps its
+      * whole word matrix in RAM (`rclip_server.py:306-308`), but
+      * "vocabulary-sized" is an assumption, so the collect is capped like
+      * every other driver-side materialization here. Over the cap: `None`,
+      * and [[lookup]] filters the cached table per query instead — bounded
+      * by the query's token count, never the vocabulary. */
+    lazy val map: Option[Map[String, Array[Float]]] =
+      if (table.count() <= wordMapMax)
+        Some(table.select(col("word"), col("vector"))
+          .as[(String, Array[Float])].collect().toMap)
+      else {
+        org.slf4j.LoggerFactory.getLogger(classOf[RClipEngine]).warn(
+          s"words table exceeds wordMapMax=$wordMapMax rows — " +
+            "falling back to per-query word lookups instead of a driver map")
+        None
+      }
+
+    /** Token → vector lookups, multiplicity- and order-preserving on both
+      * paths (duplicate query tokens contribute their vector twice,
+      * exactly like the driver-map path — the phrase estimate depends on
+      * it). */
+    private def lookup(toks: Array[String]): Array[Array[Float]] = map match {
+      case Some(m) => toks.flatMap(m.get)
+      case None =>
+        val found = table
+          .filter(col("word").isin(toks.distinct.toSeq: _*))
+          .select(col("word"), col("vector"))
+          .as[(String, Array[Float])].collect().toMap
+        toks.flatMap(found.get)
+    }
+
+    /** Embedder that resolves via the word table first (the reference's
+      * own precomputed-words mode), falling back to the base embedder. */
+    val embedder: Embedder = new Embedder {
+      val dim: Int = RClipEngine.this.embedder.dim
+      def embedText(text: String): Array[Float] = {
+        val toks = text.toLowerCase.split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty)
+        val known = lookup(toks)
+        if (known.isEmpty) RClipEngine.this.embedder.embedText(text)
+        else VectorOps.normalize(known.reduce(VectorOps.add))
+      }
+      def embedImage(bytes: Array[Byte]): Array[Float] =
+        RClipEngine.this.embedder.embedImage(bytes)
+    }
+
+    def drop(): Unit = if (derived) { table.unpersist(); () }
+  }
+
+  private val supplied: Option[Words] = wordsSource.map(ws => new Words(ws))
+
+  private val epoch = new java.util.concurrent.atomic.AtomicReference[Epoch](load(0L, None))
 
   /** Scan + soft-delete filter (S1/P2) of the newest snapshot's BASE data
     * version: `deleted IS NULL OR NOT deleted`, exact three-valued logic,
@@ -83,9 +172,9 @@ final class RClipEngine(
     * restriction (`rclip_server.py:206-212`) — a plain Catalyst predicate,
     * so prefix patterns push down to the scan as StringStartsWith.
     * Requires a `filepath` column when set. Only this base view is cached;
-    * the version's deletion set is applied on top of it ([[viewOf]]), so a
-    * censor re-points the view without dropping the cache. */
-  private def loadActive(): RClipEngine.View = {
+    * the deletion set applies on top. `prior`'s word table is kept when its
+    * base is the same. */
+  private def load(gen: Long, prior: Option[Epoch]): Epoch = {
     val (raw, version) = store.readBase(spark)
     // S1 BLOB variant: the reference stores vectors as BLOBs of
     // little-endian float32 and decodes at scan (`rclip_server.py:215`);
@@ -99,109 +188,86 @@ final class RClipEngine(
       if (df.columns.contains("deleted"))
         df.filter(col("deleted").isNull || col("deleted") === false)
       else df
-    val scoped = pathLike.fold(live)(p => live.filter(col("filepath").like(p)))
-    viewOf(version.base, scoped.cache(), version.deletedIds)
+    val cached = pathLike.fold(live)(p => live.filter(col("filepath").like(p))).cache()
+    val words = prior.filter(_.base == version.base).map(_.words)
+      .orElse(supplied)
+      .getOrElse(new Words(WordTable.labelCentroids(cached, vecCol = vecCol)))
+    epochOf(gen, version.base, cached, version.deletedIds, words, FastUnbuilt)
   }
 
-  /** The cached base view minus the deleted ids. A null id is kept, as
-    * [[SnapshotStore.markDeleted]]'s fold keeps it. */
-  private def viewOf(base: String, cached: DataFrame, deleted: Set[Long]): RClipEngine.View =
-    RClipEngine.View(base, cached, deleted,
+  /** A new generation: a fresh resolver LRU, no stats, no ANN index, and
+    * the active view = `cached` minus `deleted` (a null id is kept, as
+    * [[SnapshotStore.markDeleted]]'s fold keeps it). */
+  private def epochOf(gen: Long, base: String, cached: DataFrame, deleted: Set[Long],
+      words: Words, fast: FastState): Epoch =
+    Epoch(gen, base, cached, deleted,
       if (deleted.isEmpty) cached
-      else cached.filter(col(idCol).isNull || !col(idCol).isin(deleted.toSeq.sorted: _*)))
+      else cached.filter(col(idCol).isNull || !col(idCol).isin(deleted.toSeq.sorted: _*)),
+      words, new TermResolver(words.embedder, this), None, fast,
+      if (annServing.isEmpty) AnnDisabled else AnnUnbuilt)
+
+  /** Apply `f` to the current epoch only while it is still generation
+    * `gen`: how a build or a stats aggregate, run off the monitor, lands
+    * in the state it was computed from and never in a later one. */
+  private def install(gen: Long)(f: Epoch => Epoch): Epoch =
+    epoch.updateAndGet(c => if (c.gen == gen) f(c) else c)
+
+  /** Build one serving index of epoch `e` off the engine monitor, so a
+    * corpus-sized build never blocks a mutation or a request (VERDICT r08
+    * next-#3): claim the slot `unbuilt` → `claim` (a Building state naming
+    * `e.gen`; a caller finding it serves the fallback regime), build, and
+    * install only while the epoch is generation `e.gen` with the claim in
+    * place, so an index of a superseded snapshot never installs. A build
+    * that throws resets the claim. Returns the built state, which is `e`'s
+    * whether or not it installed; None if the claim was lost. */
+  private def claimed[S](e: Epoch, slot: Epoch => S, put: (Epoch, S) => Epoch,
+      unbuilt: S, claim: S)(build: => S): Option[S] = {
+    var won = false
+    install(e.gen) { c =>
+      won = slot(c) == unbuilt
+      if (won) put(c, claim) else c
+    }
+    if (!won) None
+    else {
+      def settle(s: S): Unit = {
+        install(e.gen)(c => if (slot(c) == claim) put(c, s) else c); ()
+      }
+      val built = try build catch { case t: Throwable => settle(unbuilt); throw t }
+      settle(built)
+      Some(built)
+    }
+  }
 
   /** Live (non-deleted) rows, cached. */
-  def images: DataFrame = activeDf
+  def images: DataFrame = epoch.get.active
 
-  def count(): Long = activeDf.count()
+  def count(): Long = epoch.get.active.count()
 
-  /** M3: drop caches, re-read the newest snapshot, invalidate stats.
-    * Setting the serving states to Unbuilt also dooms any IN-FLIGHT
-    * index build: its completion CAS (Building(token) → Built) can no
-    * longer match, so a pre-mutation index never installs. */
+  /** M3: drop the cached view and re-read the newest snapshot into a new
+    * epoch, which also dooms any in-flight index build. The word table
+    * survives only if the base data version did. */
   def reload(): Unit = synchronized {
-    view.cached.unpersist()
-    view = loadActive()
-    statsCache = None
-    fastCache.set(RClipEngine.FastUnbuilt)
-    annCache.set(RClipEngine.AnnUnbuilt)
+    val e = epoch.get
+    e.cached.unpersist()
+    val next = load(e.gen + 1, Some(e))
+    epoch.set(next)
+    if (next.words ne e.words) e.words.drop()
   }
 
   // ---------------------------------------------------------------- words
 
-  /** Words table (S3): supplied, or derived per-label centroids. */
-  lazy val words: DataFrame = WordTable.lowercaseOnly(
-    wordsSource.getOrElse(
-      WordTable.labelCentroids(activeDf, vecCol = vecCol))).cache()
+  /** Words table (S3): supplied, or derived per-label centroids of the
+    * current base. */
+  def words: DataFrame = epoch.get.words.table
 
-  /** Bounded driver word map (VERDICT r03 #3): the reference keeps its
-    * whole word matrix in RAM (`rclip_server.py:306-308`) and a
-    * vocabulary-sized table fits a driver Map fine — but "vocabulary-
-    * sized" is an assumption, not a law, so the collect is capped like
-    * every other driver-side materialization here (c05's SPAN_HOT_MAX,
-    * d05's require). Over the cap: `None`, and [[lookupWordVectors]]
-    * switches to a per-query filtered lookup against the cached words
-    * table — bounded by the query's token count, never the vocabulary —
-    * so `tableEmbedder` (and the TermResolver LRU above it) survive a
-    * 100× words table instead of OOMing the driver. */
-  private lazy val wordVectors: Option[Map[String, Array[Float]]] =
-    if (words.count() <= wordMapMax)
-      Some(words.select(col("word"), col("vector"))
-        .as[(String, Array[Float])].collect().toMap)
-    else {
-      org.slf4j.LoggerFactory.getLogger(classOf[RClipEngine]).warn(
-        s"words table exceeds wordMapMax=$wordMapMax rows — " +
-          "falling back to per-query word lookups instead of a driver map")
-      None
-    }
-
-  /** Token → vector lookups, multiplicity- and order-preserving on both
-    * paths (duplicate query tokens contribute their vector twice, exactly
-    * like the driver-map path — the phrase estimate depends on it). */
-  private def lookupWordVectors(toks: Array[String]): Array[Array[Float]] =
-    wordVectors match {
-      case Some(m) => toks.flatMap(m.get)
-      case None =>
-        val found = words
-          .filter(col("word").isin(toks.distinct.toSeq: _*))
-          .select(col("word"), col("vector"))
-          .as[(String, Array[Float])].collect().toMap
-        toks.flatMap(found.get)
-    }
-
-  /** Embedder that resolves via the word table first (the reference's own
-    * precomputed-words mode), falling back to the base embedder. */
-  private lazy val tableEmbedder: Embedder = new Embedder {
-    val dim: Int = embedder.dim
-    def embedText(text: String): Array[Float] = {
-      val toks = text.toLowerCase.split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty)
-      val known = lookupWordVectors(toks)
-      if (known.isEmpty) embedder.embedText(text)
-      else VectorOps.normalize(known.reduce(VectorOps.add))
-    }
-    def embedImage(bytes: Array[Byte]): Array[Float] = embedder.embedImage(bytes)
-  }
-
-  lazy val resolver = new TermResolver(tableEmbedder, this)
+  /** The current epoch's term resolver and its LRU. */
+  def resolver: TermResolver = epoch.get.resolver
 
   // ------------------------------------------------- StoredVectors (J2/Q7)
 
-  /** From the RAM matrix when it is built (the first row with this id, in
-    * the collect order the Spark lookup's `headOption` also sees; no job),
-    * otherwise one Spark filter job. Never builds the matrix. */
-  override def byId(id: Long): Option[Array[Float]] = fastCache.get() match {
-    case RClipEngine.FastBuilt(idx) =>
-      var r = 0
-      while (r < idx.ids.length && idx.ids(r) != id) r += 1
-      if (r == idx.ids.length) None else Some(idx.vecs(r).clone())
-    case _ =>
-      activeDf.filter(col(idCol) === id).select(col(vecCol))
-        .as[Array[Float]].collect().headOption
-  }
+  override def byId(id: Long): Option[Array[Float]] = epoch.get.byId(id)
 
-  override def random(): Option[Array[Float]] =
-    activeDf.select(col(vecCol)).orderBy(rand(seed)).limit(1)
-      .as[Array[Float]].collect().headOption
+  override def random(): Option[Array[Float]] = epoch.get.random()
 
   // ---------------------------------------------------------------- reads
 
@@ -219,20 +285,17 @@ final class RClipEngine(
     * — with BIT-IDENTICAL results (same index-order Double dot, same
     * HALF_UP 4-dp round, same (score DESC, id ASC) cut; EngineSpec pins
     * fast == distributed on the real corpus). Above the cap: the
-    * distributed path, unchanged. A censor drops the censored rows from
-    * the matrix ([[censor]]); other mutations invalidate it via
-    * [[reload]] like every other engine cache. */
-  def search(q: String, num: Int = 12): DataFrame =
-    resolver.resolve(q) match {
+    * distributed path, unchanged. */
+  def search(q: String, num: Int = 12): DataFrame = {
+    val e = epoch.get
+    e.resolve(q) match {
       case None => noHits
-      case Some(v) => fastIndex() match {
+      case Some(v) => fastIndex(e) match {
         case Some(idx) => fastScore(idx, v, num).toSeq.toDF("id", "score")
-        case None => annIndex() match {
-          case Some(ix) => annTopK(ix, v, num)
-          case None => scoreTopK(activeDf, v, num)
-        }
+        case None => distributed(e, v, num)
       }
     }
+  }
 
   /** Typed serving twin of [[search]]: the same resolve → score → top-k,
     * returned as driver rows with NO DataFrame wrap — on the fast path
@@ -242,30 +305,34 @@ final class RClipEngine(
     * layer serves `/search_api` from this. Distributed fallback collects
     * the same k-bounded [[scoreTopK]], so results are identical to
     * `search()` in both regimes. */
-  def searchRows(q: String, num: Int = 12): Seq[(Long, Double)] =
-    resolver.resolve(q) match {
+  def searchRows(q: String, num: Int = 12): Seq[(Long, Double)] = {
+    val e = epoch.get
+    e.resolve(q) match {
       case None => Seq.empty
-      case Some(v) => fastIndex() match {
+      case Some(v) => fastIndex(e) match {
         case Some(idx) => fastScore(idx, v, num).toSeq
-        case None => annIndex() match {
-          case Some(ix) => annTopK(ix, v, num)
-            .as[(Long, Double)].collect().toSeq
-          case None => scoreTopK(activeDf, v, num)
-            .as[(Long, Double)].collect().toSeq
-        }
+        case None => distributed(e, v, num).as[(Long, Double)].collect().toSeq
       }
     }
+  }
 
   /** EXACT search regardless of regime: the distributed brute scored
     * scan, the fallback an above-cap ANN caller uses to trade latency
     * back for guaranteed-exact results (and the ground truth the ANN
     * path's recall is measured against). Below the cap this equals
     * `search()` bit-for-bit (EngineSpec pins fast ≡ distributed). */
-  def searchExact(q: String, num: Int = 12): DataFrame =
-    resolver.resolve(q) match {
+  def searchExact(q: String, num: Int = 12): DataFrame = {
+    val e = epoch.get
+    e.resolve(q) match {
       case None => noHits
-      case Some(v) => scoreTopK(activeDf, v, num)
+      case Some(v) => scoreTopK(e.active, v, num)
     }
+  }
+
+  /** Above the fast cap: the ANN ranking when an index serves `e`, else
+    * the brute scored scan. */
+  private def distributed(e: Epoch, v: Array[Float], num: Int): DataFrame =
+    annIndex(e).fold(scoreTopK(e.active, v, num))(annTopK(e, _, v, num))
 
   /** The empty (id, score) result of a query that resolves to nothing. */
   private lazy val noHits: DataFrame = spark.emptyDataFrame
@@ -279,46 +346,23 @@ final class RClipEngine(
       .orderBy(col("score").desc, col("id").asc)
       .limit(k)
 
-  /** Build (or reuse) the driver-resident matrix; None = corpus over the
-    * cap, serve distributed. One collect of n·(8 + 4·dim) bytes — the
-    * same RAM envelope the reference pays up front at startup.
-    *
-    * Lock scope (ADVICE r07 → VERDICT r08 next-#3): the build runs
-    * OUTSIDE the engine monitor. The builder claims the state with a
-    * unique Building token and CASes the result in; a concurrent caller
-    * seeing Building serves the distributed path (bit-identical results,
-    * EngineSpec-pinned) instead of waiting, and a reload() during the
-    * build resets the state so the stale matrix never installs. */
-  private def fastIndex(): Option[RClipEngine.FastIndex] = fastCache.get() match {
-    case RClipEngine.FastBuilt(idx) => Some(idx)
-    case RClipEngine.FastDisabled => None
-    case _: RClipEngine.FastBuilding => None // in-flight build: serve distributed
-    case RClipEngine.FastUnbuilt =>
-      val token = RClipEngine.FastBuilding(buildTokens.incrementAndGet())
-      if (!fastCache.compareAndSet(RClipEngine.FastUnbuilt, token))
-        fastIndex() // someone else moved the state; re-read it
-      else {
-        val result =
-          try {
-            if (count() > fastPathMaxRows) RClipEngine.FastDisabled
-            else {
-              val rows = activeDf.select(col(idCol), col(vecCol))
-                .as[(Long, Array[Float])].collect()
-              RClipEngine.FastBuilt(
-                RClipEngine.FastIndex(rows.map(_._1), rows.map(_._2)))
-            }
-          } catch {
-            case t: Throwable =>
-              fastCache.compareAndSet(token, RClipEngine.FastUnbuilt)
-              throw t
-          }
-        // install only if no reload() superseded this build
-        fastCache.compareAndSet(token, result)
-        fastCache.get() match {
-          case RClipEngine.FastBuilt(idx) => Some(idx)
-          case _ => None
+  /** The driver-resident matrix of epoch `e`, built on first use through
+    * [[claimed]]; None = corpus over the cap or a build in flight (serve
+    * distributed: bit-identical, EngineSpec-pinned). One collect of
+    * n·(8 + 4·dim) bytes — the RAM envelope the reference pays up front. */
+  private def fastIndex(e: Epoch): Option[FastIndex] = e.fast match {
+    case FastBuilt(idx) => Some(idx)
+    case FastUnbuilt =>
+      claimed[FastState](e, _.fast, (c, s) => c.copy(fast = s), FastUnbuilt,
+          FastBuilding(e.gen)) {
+        if (e.active.count() > fastPathMaxRows) FastDisabled
+        else {
+          val rows = e.active.select(col(idCol), col(vecCol))
+            .as[(Long, Array[Float])].collect()
+          FastBuilt(FastIndex(rows.map(_._1), rows.map(_._2)))
         }
-      }
+      }.collect { case FastBuilt(idx) => idx }
+    case _ => None // disabled, or a build in flight
   }
 
   /** Driver-side twin of [[scoreTopK]]: identical arithmetic
@@ -330,7 +374,7 @@ final class RClipEngine(
     * the two paths are indistinguishable to a caller. Rows are scored one
     * 8-row block at a time into a fixed buffer, so a request allocates
     * nothing corpus-sized. */
-  private def fastScore(idx: RClipEngine.FastIndex,
+  private def fastScore(idx: FastIndex,
       v: Array[Float], k: Int): Array[(Long, Double)] = {
     val qd = v.map(_.toDouble)
     val block = new Array[Double](VectorOps.Block)
@@ -359,97 +403,67 @@ final class RClipEngine(
     * candidate CUT is approximate (EngineSpec pins a recall floor, and
     * [[searchExact]] stays available as the exact fallback).
     *
-    * Built by [[warm]] (or lazily on first above-cap search when
-    * `buildOnFirstSearch` is set) from the active snapshot; mutations
-    * invalidate it (censor directly, the others via [[reload]]) — and
-    * the on-disk artifact's `_graft_built_from` marker stops matching
-    * the new store version — so a censored row can never be served from
-    * a stale index. With `artifactPath` set, the built index is SAVED
-    * and re-LOADED so the probe path is the persisted cell-partitioned
-    * parquet layout — the shape a 1000-executor deployment serves from
-    * (build once per snapshot, every search a pruned point read).
-    *
-    * Regime POLICY (VERDICT r08 next-#3): by default a search request
-    * never triggers the minutes-long corpus build — it serves ANN when a
-    * TRUSTED artifact exists (saved from this store version + config,
-    * attested by the `_graft_built_from` marker; a cheap load), and brute
-    * otherwise. Builds happen through [[warm]] (startup / post-reload) or,
-    * opt-in, on first search via `buildOnFirstSearch`. Like [[fastIndex]],
-    * any build/load runs OUTSIDE the engine monitor with a unique Building
-    * token: concurrent censor/reload/search never block on it, and a
-    * reload() mid-build dooms the stale index's installing CAS. */
-  private def annIndex(forceBuild: Boolean = false): Option[RClipEngine.AnnBuilt] =
-    annCache.get() match {
-      case b: RClipEngine.AnnBuilt => Some(b)
-      case RClipEngine.AnnDisabled => None
-      case _: RClipEngine.AnnBuilding => None // in-flight: serve brute
-      case RClipEngine.AnnUnbuilt => annServing match {
-        case None =>
-          annCache.compareAndSet(RClipEngine.AnnUnbuilt, RClipEngine.AnnDisabled)
-          None
-        case Some(p) =>
-          val trusted = annArtifactTrusted(p)
-          if (!trusted && !forceBuild && !p.buildOnFirstSearch) None // brute
-          else {
-            val token = RClipEngine.AnnBuilding(buildTokens.incrementAndGet())
-            if (!annCache.compareAndSet(RClipEngine.AnnUnbuilt, token))
-              annIndex(forceBuild) // state moved under us; re-read
-            else {
-              val result =
-                try {
-                  val ix =
-                    if (trusted) graft.ann.IvfPqIndex.load(spark, p.artifactPath.get)
-                    else {
-                      // real Lloyd iterations on BOTH codebooks: the
-                      // query-time operators keep iters=0 for bitwise-
-                      // reproducible oracles, but a SERVING index's recall
-                      // depends on cells that follow the data geometry —
-                      // nprobe/cells is only a meaningful pruning ratio
-                      // when near-neighbors share cells
-                      val built = graft.ann.IvfPqIndex.build(
-                        activeDf.select(col(idCol), col(vecCol)),
-                        idCol = idCol, vecCol = vecCol,
-                        cells = p.cells, ivfIters = p.ivfIters,
-                        m = p.m, k = p.k, pqIters = p.pqIters)
-                      p.artifactPath match {
-                        case Some(path) =>
-                          built.save(path)
-                          writeAnnMarker(p, path)
-                          built.codes.unpersist()
-                          graft.ann.IvfPqIndex.load(spark, path)
-                        case None => built
-                      }
-                    }
-                  // RAM-COARSE regime: below driverCodesMaxRows also hold
-                  // the 20 B/row packed-code table driver-resident — the
-                  // coarse cut then costs no Spark dispatch at all (the
-                  // 8 B codes fit the driver 32× past the point the fp32
-                  // matrix cannot)
-                  val codeIdx =
-                    if (count() > p.driverCodesMaxRows) None
-                    else {
-                      val rows = ix.codes
-                        .select(col(idCol), col("cell"), col("code"))
-                        .as[(Long, Int, Long)].collect()
-                      Some(RClipEngine.CodeIndex(rows.map(_._1),
-                        rows.map(_._2), rows.map(_._3)))
-                    }
-                  RClipEngine.AnnBuilt(ix, codeIdx)
-                } catch {
-                  case t: Throwable =>
-                    annCache.compareAndSet(token, RClipEngine.AnnUnbuilt)
-                    throw t
-                }
-              // install only if no reload() superseded this build
-              annCache.compareAndSet(token, result)
-              annCache.get() match {
-                case b: RClipEngine.AnnBuilt => Some(b)
-                case _ => None
-              }
-            }
-          }
-      }
+    * Regime POLICY (VERDICT r08 next-#3): a search request never triggers
+    * the minutes-long corpus build. It serves ANN when a TRUSTED artifact
+    * exists (saved from this store version + config, attested by the
+    * `_graft_built_from` marker; a cheap load), and brute otherwise; only
+    * [[warm]] (`forceBuild`) builds. With `artifactPath` set, the built
+    * index is SAVED and re-LOADED so the probe path is the persisted
+    * cell-partitioned parquet layout — the shape a 1000-executor
+    * deployment serves from (build once per snapshot, every search a
+    * pruned point read). A mutation starts an epoch without the index and
+    * a store version the marker no longer matches, so a censored row is
+    * never served from a stale index. Built through [[claimed]]. */
+  private def annIndex(e: Epoch, forceBuild: Boolean = false): Option[AnnBuilt] =
+    e.ann match {
+      case b: AnnBuilt => Some(b)
+      case AnnUnbuilt =>
+        val p = annServing.get
+        val trusted = annArtifactTrusted(p)
+        if (!trusted && !forceBuild) None // brute
+        else claimed[AnnState](e, _.ann, (c, s) => c.copy(ann = s), AnnUnbuilt,
+          AnnBuilding(e.gen))(buildAnn(e, p, trusted)).collect { case b: AnnBuilt => b }
+      case _ => None // disabled, or a build in flight
     }
+
+  private def buildAnn(e: Epoch, p: RClipEngine.AnnServing, trusted: Boolean): AnnBuilt = {
+    val ix =
+      if (trusted) graft.ann.IvfPqIndex.load(spark, p.artifactPath.get)
+      else {
+        // real Lloyd iterations on BOTH codebooks: the query-time
+        // operators keep iters=0 for bitwise-reproducible oracles, but a
+        // SERVING index's recall depends on cells that follow the data
+        // geometry — nprobe/cells is only a meaningful pruning ratio when
+        // near-neighbors share cells
+        val built = graft.ann.IvfPqIndex.build(
+          e.active.select(col(idCol), col(vecCol)),
+          idCol = idCol, vecCol = vecCol,
+          cells = p.cells, ivfIters = p.ivfIters,
+          m = p.m, k = p.k, pqIters = p.pqIters)
+        p.artifactPath match {
+          case Some(path) =>
+            built.save(path)
+            java.nio.file.Files.writeString(
+              new java.io.File(path, "_graft_built_from").toPath, annMarkerExpected(p))
+            built.codes.unpersist()
+            graft.ann.IvfPqIndex.load(spark, path)
+          case None => built
+        }
+      }
+    // RAM-COARSE regime: below driverCodesMaxRows also hold the 20 B/row
+    // packed-code table driver-resident — the coarse cut then costs no
+    // Spark dispatch at all (the 8 B codes fit the driver 32× past the
+    // point the fp32 matrix cannot)
+    val codeIdx =
+      if (e.active.count() > p.driverCodesMaxRows) None
+      else {
+        val rows = ix.codes
+          .select(col(idCol), col("cell"), col("code"))
+          .as[(Long, Int, Long)].collect()
+        Some(RClipEngine.CodeIndex(rows.map(_._1), rows.map(_._2), rows.map(_._3)))
+      }
+    AnnBuilt(ix, codeIdx)
+  }
 
   /** The `_graft_built_from` marker ties a saved serving artifact to the
     * snapshot VERSION and index config it was built from: a mutation
@@ -461,12 +475,6 @@ final class RClipEngine(
       s"id=$idCol;vec=$vecCol;cells=${p.cells};m=${p.m};k=${p.k};" +
       s"ivf=${p.ivfIters};pq=${p.pqIters}"
 
-  private def writeAnnMarker(p: RClipEngine.AnnServing, path: String): Unit = {
-    java.nio.file.Files.writeString(
-      new java.io.File(path, "_graft_built_from").toPath, annMarkerExpected(p))
-    ()
-  }
-
   private def annArtifactTrusted(p: RClipEngine.AnnServing): Boolean =
     p.artifactPath.exists { path =>
       val mk = new java.io.File(path, "_graft_built_from")
@@ -476,23 +484,20 @@ final class RClipEngine(
       }
     }
 
-  /** Pre-build the serving indexes for the CURRENT snapshot (VERDICT r08
-    * next-#3): call at startup and after mutations/reload so no request
-    * ever pays (or waits behind) an index build. Runs outside the engine
-    * monitor — concurrent censor/search during the warm proceed normally
-    * (they serve the fallback regime until the CAS lands). Below the fast
-    * cap this warms the RAM matrix; above it, the ANN regime when
-    * configured (building and persisting the artifact if absent or
-    * untrusted). A reload() racing the warm simply wins: the half-built
-    * index is discarded and the next warm() rebuilds from the new
-    * snapshot. */
+  /** Pre-build the current epoch's serving index (VERDICT r08 next-#3):
+    * call at startup and after mutations so no request ever pays (or waits
+    * behind) a build. Below the fast cap this warms the RAM matrix; above
+    * it, the ANN regime when configured (building and persisting the
+    * artifact if absent or untrusted). A mutation racing the warm wins:
+    * the half-built index never installs ([[claimed]]). */
   def warm(): Unit = {
-    if (fastIndex().isEmpty) { annIndex(forceBuild = true); () }
+    val e = epoch.get
+    if (fastIndex(e).isEmpty) { annIndex(e, forceBuild = true); () }
   }
 
   /** Serving-state probe for specs and monitoring. */
-  private[engine] def annState: RClipEngine.AnnState = annCache.get()
-  private[engine] def fastState: RClipEngine.FastState = fastCache.get()
+  private[engine] def annState: AnnState = epoch.get.ann
+  private[engine] def fastState: FastState = epoch.get.fast
 
   /** DRIFT MONITORING against the LIVE serving index (VERDICT r08
     * next-#4): one health row measuring what a deployment alarms on
@@ -503,15 +508,16 @@ final class RClipEngine(
     * Cost: |panel| reranked searches + |panel| exact scans + one
     * code-table aggregate — the measurement loop n10/n13 run as corpus
     * queries, pointed at the serving artifact. */
-  def annHealth(panel: Seq[String], k: Int = 10): Option[RClipEngine.AnnHealth] =
-    annCache.get() match {
-      case b: RClipEngine.AnnBuilt if panel.nonEmpty =>
+  def annHealth(panel: Seq[String], k: Int = 10): Option[RClipEngine.AnnHealth] = {
+    val e = epoch.get
+    e.ann match {
+      case b: AnnBuilt if panel.nonEmpty =>
         val p = annServing.get
         val recalls = panel.flatMap { q =>
-          resolver.resolve(q).map { v =>
-            val truth = scoreTopK(activeDf, v, k)
+          e.resolve(q).map { v =>
+            val truth = scoreTopK(e.active, v, k)
               .select(col("id")).as[Long].collect().toSet
-            val got = annTopK(b, v, k)
+            val got = annTopK(e, b, v, k)
               .select(col("id")).as[Long].collect().toSet
             if (truth.isEmpty) 1000L
             else (got & truth).size * 1000L / truth.size
@@ -526,18 +532,18 @@ final class RClipEngine(
           val nCells = b.ix.centroids.length
           val meanSz = rows.toDouble / math.max(1, nCells)
           val skew = if (rows == 0L) 0.0 else sizes.map(_._2).max / meanSz
-          val health = RClipEngine.AnnHealth(
+          Some(RClipEngine.AnnHealth(
             recallPermille = recalls.sum / recalls.size,
             worstPermille = recalls.min,
             cellSkew = skew,
             emptyCells = nCells.toLong - sizes.length,
             rows = rows,
             alarm = recalls.sum / recalls.size < p.healthRecallFloorPermille ||
-              skew > p.healthCellSkewMax)
-          Some(health)
+              skew > p.healthCellSkewMax))
         }
       case _ => None
     }
+  }
 
   /** ANN top-k: pruned ADC candidates, then the exact rerank reuses
     * [[scoreTopK]] over the candidate-restricted live rows — identical
@@ -549,7 +555,7 @@ final class RClipEngine(
     * same codes with the same (adc DESC, id ASC) order, so RAM-coarse,
     * distributed-coarse, and their reranks are indistinguishable to a
     * caller (EngineSpec pins all three equalities). */
-  private def annTopK(b: RClipEngine.AnnBuilt, v: Array[Float],
+  private def annTopK(e: Epoch, b: AnnBuilt, v: Array[Float],
       k: Int): DataFrame = {
     val p = annServing.get
     b.codeIdx match {
@@ -557,30 +563,31 @@ final class RClipEngine(
         val lut = graft.ann.PqIndex.lut(b.ix.flatCodebook, b.ix.m, b.ix.k, v)
         val cand = RClipEngine.ramCoarseCut(ci, lut, b.ix.m, b.ix.k,
           b.ix.probeCells(v, p.nprobe), p.coarseK)
-        scoreTopK(activeDf.filter(col(idCol).isin(cand: _*)), v, k)
+        scoreTopK(e.active.filter(col(idCol).isin(cand: _*)), v, k)
       case None =>
         val cand = b.ix.searchAdc(v, topk = p.coarseK, nprobe = p.nprobe)
           .select(col(idCol))
-        scoreTopK(activeDf.join(broadcast(cand), idCol), v, k)
+        scoreTopK(e.active.join(broadcast(cand), idCol), v, k)
     }
   }
 
   /** `/clip_embedding` — the resolved query vector. */
-  def resolveEmbedding(q: String): Option[Array[Float]] = resolver.resolve(q)
+  def resolveEmbedding(q: String): Option[Array[Float]] = epoch.get.resolve(q)
 
   /** `/clip_text_embedding` — raw text-encoder output, no query algebra. */
-  def textEmbedding(q: String): Array[Float] = tableEmbedder.embedText(q)
+  def textEmbedding(q: String): Array[Float] = epoch.get.words.embedder.embedText(q)
 
   /** K2 — top-`num` most similar words (`rclip_server.py:310-312,399`). */
-  def similarWords(q: String, num: Int = 50): DataFrame =
-    resolver.resolve(q) match {
-      case None => spark.emptyDataFrame.limit(0)
-      case Some(v) =>
-        words.select(col("word"),
-            round(VectorOps.dotQueryNative(col("vector"), v), 4).as("score"))
-          .orderBy(col("score").desc, col("word").asc)
-          .limit(num)
-    }
+  def similarWords(q: String, num: Int = 50): DataFrame = {
+    val e = epoch.get
+    e.resolve(q).fold(spark.emptyDataFrame.limit(0))(wordTopK(e, _, num))
+  }
+
+  private def wordTopK(e: Epoch, v: Array[Float], num: Int): DataFrame =
+    e.words.table.select(col("word"),
+        round(VectorOps.dotQueryNative(col("vector"), v), 4).as("score"))
+      .orderBy(col("score").desc, col("word").asc)
+      .limit(num)
 
   /** Typed serving twin of [[similarWords]] (the `/similar_words` word
     * half, `rclip_server.py:395-402`): when the vocabulary-sized word
@@ -590,17 +597,19 @@ final class RClipEngine(
     * shared selector [[TopK.byRoundedScore]] on the rounded score, ties
     * by [[RClipEngine.utf8Compare]] (Spark's word ASC); over the cap,
     * collect the distributed ranking. EngineSpec pins map ≡ distributed. */
-  def similarWordsRows(q: String, num: Int = 50): Seq[(String, Double)] =
-    resolver.resolve(q) match {
+  def similarWordsRows(q: String, num: Int = 50): Seq[(String, Double)] = {
+    val e = epoch.get
+    e.resolve(q) match {
       case None => Seq.empty
-      case Some(v) => wordVectors match {
+      case Some(v) => e.words.map match {
         case Some(m) =>
           val (ws, vecs) = m.toArray.unzip
           RClipEngine.topTexts(ws, num, r => VectorOps.vecDot(vecs(r), v))
         case None =>
-          similarWords(q, num).as[(String, Double)].collect().toSeq
+          wordTopK(e, v, num).as[(String, Double)].collect().toSeq
       }
     }
+  }
 
   /** Typed serving twin of [[similarPhrases]] (estimate variant — the
     * endpoint's serving path; the `exact = true` re-encode trade stays
@@ -616,12 +625,13 @@ final class RClipEngine(
     * cut on the rounded phrase score ([[TopK.byRoundedScore]]). Over
     * [[wordMapMax]]: distributed fallback. */
   def similarPhrasesRows(q: String, num: Int = 50,
-      combosPerLen: Int = 1000, topWords: Int = 200): Seq[(String, Double)] =
-    resolver.resolve(q) match {
+      combosPerLen: Int = 1000, topWords: Int = 200): Seq[(String, Double)] = {
+    val e = epoch.get
+    e.resolve(q) match {
       case None => Seq.empty
-      case Some(v) => wordVectors match {
+      case Some(v) => e.words.map match {
         case None =>
-          similarPhrases(q, num, combosPerLen, topWords)
+          phraseTopK(e, v, num, combosPerLen, topWords, exact = false)
             .as[(String, Double)].collect().toSeq
         case Some(m) =>
           // pool: same raw (un-rounded) score ordering as the DataFrame
@@ -647,6 +657,7 @@ final class RClipEngine(
           RClipEngine.topTexts(scored.map(_._1), num, r => scored(r)._2)
       }
     }
+  }
 
   /** W1–W3 — random multi-word phrase candidates scored by the normalized
     * word-vector-sum estimate, or (`exact = true`) by re-encoding each
@@ -658,48 +669,53 @@ final class RClipEngine(
     * Deterministic via seed. */
   def similarPhrases(q: String, num: Int = 50,
       combosPerLen: Int = 1000, topWords: Int = 200,
-      exact: Boolean = false): DataFrame =
-    resolver.resolve(q) match {
-      case None => spark.emptyDataFrame.limit(0)
-      case Some(v) =>
-        // top-`topWords` words for this query (reference :331)
-        val pool = words
-          .select(col("word"), col("vector"),
-            VectorOps.dotQueryNative(col("vector"), v).as("wscore"))
-          .orderBy(col("wscore").desc, col("word").asc)
-          .limit(topWords)
-          .select("word").as[String].collect()
-        val candidates = phraseCandidates(pool, combosPerLen)
-        if (exact) {
-          // W2 exact: per-candidate re-encode in a distributed UDF (the
-          // encoder port is Serializable — ship the base embedder, never
-          // the engine). No driver loop; the candidate set stays on
-          // executors until the k-bounded top-k merge.
-          val enc = embedder
-          val exactScore = udf { (phrase: String) =>
-            java.lang.Double.valueOf(VectorOps.dot(enc.embedText(phrase), v))
-          }
-          candidates.toDF("phrase")
-            .select(col("phrase"), round(exactScore(col("phrase")), 4).as("score"))
-            .orderBy(col("score").desc, col("phrase").asc)
-            .limit(num)
-        } else {
-          val candDf = candidates.toDF("phrase")
-            .withColumn("word", explode(split(col("phrase"), " ")))
-          val toUnitFloat = udf { (a: Array[Double]) =>
-            if (a == null) null
-            else VectorOps.normalize(a.map(_.toFloat))
-          }
-          candDf
-            .join(broadcast(words), "word") // J3; words is tiny → broadcast
-            .groupBy("phrase")
-            .agg(VectorAggregators.vecSum(col("vector")).as("vsum")) // W1
-            .select(col("phrase"),
-              round(VectorOps.dotQueryNative(toUnitFloat(col("vsum")), v), 4).as("score"))
-            .orderBy(col("score").desc, col("phrase").asc)
-            .limit(num)
-        }
+      exact: Boolean = false): DataFrame = {
+    val e = epoch.get
+    e.resolve(q).fold(spark.emptyDataFrame.limit(0))(
+      phraseTopK(e, _, num, combosPerLen, topWords, exact))
+  }
+
+  private def phraseTopK(e: Epoch, v: Array[Float], num: Int,
+      combosPerLen: Int, topWords: Int, exact: Boolean): DataFrame = {
+    val words = e.words.table
+    // top-`topWords` words for this query (reference :331)
+    val pool = words
+      .select(col("word"), col("vector"),
+        VectorOps.dotQueryNative(col("vector"), v).as("wscore"))
+      .orderBy(col("wscore").desc, col("word").asc)
+      .limit(topWords)
+      .select("word").as[String].collect()
+    val candidates = phraseCandidates(pool, combosPerLen)
+    if (exact) {
+      // W2 exact: per-candidate re-encode in a distributed UDF (the
+      // encoder port is Serializable — ship the base embedder, never
+      // the engine). No driver loop; the candidate set stays on
+      // executors until the k-bounded top-k merge.
+      val enc = embedder
+      val exactScore = udf { (phrase: String) =>
+        java.lang.Double.valueOf(VectorOps.dot(enc.embedText(phrase), v))
+      }
+      candidates.toDF("phrase")
+        .select(col("phrase"), round(exactScore(col("phrase")), 4).as("score"))
+        .orderBy(col("score").desc, col("phrase").asc)
+        .limit(num)
+    } else {
+      val candDf = candidates.toDF("phrase")
+        .withColumn("word", explode(split(col("phrase"), " ")))
+      val toUnitFloat = udf { (a: Array[Double]) =>
+        if (a == null) null
+        else VectorOps.normalize(a.map(_.toFloat))
+      }
+      candDf
+        .join(broadcast(words), "word") // J3; words is tiny → broadcast
+        .groupBy("phrase")
+        .agg(VectorAggregators.vecSum(col("vector")).as("vsum")) // W1
+        .select(col("phrase"),
+          round(VectorOps.dotQueryNative(toUnitFloat(col("vsum")), v), 4).as("score"))
+        .orderBy(col("score").desc, col("phrase").asc)
+        .limit(num)
     }
+  }
 
   /** The seeded phrase draw over the ranked word `pool`: `combosPerLen`
     * samples of 2, 3 and 4 distinct pool words each (the reference's
@@ -717,37 +733,42 @@ final class RClipEngine(
   // ---------------------------------------------------------------- stats
 
   /** A1/A2: element-wise (min, max) over all live embeddings — one
-    * map-side-combining aggregation (`rclip_server.py:63-65`). */
-  def stats(): (Array[Double], Array[Double]) = statsCache.getOrElse {
-    val row = activeDf.agg(
+    * map-side-combining aggregation (`rclip_server.py:63-65`), kept by
+    * the epoch it was computed from. */
+  def stats(): (Array[Double], Array[Double]) = stats(epoch.get)
+
+  private def stats(e: Epoch): (Array[Double], Array[Double]) = e.stats.getOrElse {
+    val row = e.active.agg(
       VectorAggregators.vecMin(col(vecCol)).as("lo"),
       VectorAggregators.vecMax(col(vecCol)).as("hi")).head()
     val s = (row.getSeq[Double](0).toArray, row.getSeq[Double](1).toArray)
-    statsCache = Some(s)
+    install(e.gen)(_.copy(stats = Some(s)))
     s
   }
 
   /** `/visualize_clip_embedding` — per-dimension cells normalized by the
     * corpus min/max (`rclip_server.py:253-273`). */
-  def visualize(q: String): Seq[DimCell] =
-    resolver.resolve(q) match {
+  def visualize(q: String): Seq[DimCell] = {
+    val e = epoch.get
+    e.resolve(q) match {
       case None => Nil
       case Some(v) =>
-        val (lo, hi) = stats()
+        val (lo, hi) = stats(e)
         v.toSeq.zipWithIndex.map { case (x, i) =>
           val range = hi(i) - lo(i)
           val t = if (range == 0) 0.5 else ((x - lo(i)) / range).max(0.0).min(1.0)
           DimCell(i, x, t, Colormap.hex(t))
         }
     }
+  }
 
   /** `/img/{id}` thumbnail-size rewrite: the stored 600px CDN variant
     * rewritten to the requested size (`rclip_server.py:461-463`). Returns
     * None for unknown ids or rows without a thumb URL. */
   def thumbnailUrl(id: Long, size: Int = 600): Option[String] = {
-    val cols = activeDf.columns
-    if (!cols.contains("thumb_url")) None
-    else activeDf.filter(col(idCol) === id).select(col("thumb_url"))
+    val active = epoch.get.active
+    if (!active.columns.contains("thumb_url")) None
+    else active.filter(col(idCol) === id).select(col("thumb_url"))
       .as[Option[String]].collect().headOption.flatten
       .map(_.replaceFirst("/600px-", s"/${size}px-"))
   }
@@ -771,8 +792,9 @@ final class RClipEngine(
         graft.multimodal.MultimodalOps.FakeMediaDecoder): Option[Thumb] =
     if (id == -1L) Some(SvgPlaceholder(placeholderSvg(size)))
     else thumbnailUrl(id, size).map(RedirectUrl(_)).orElse {
-      if (!activeDf.columns.contains("filepath")) None
-      else activeDf.filter(col(idCol) === id).select(col("filepath"))
+      val active = epoch.get.active
+      if (!active.columns.contains("filepath")) None
+      else active.filter(col(idCol) === id).select(col("filepath"))
         .as[String].collect().headOption
         .map(p => ResizedBytes(decoder.resize(fetcher.fetch(p), size, size * 3 / 4)))
     }
@@ -781,7 +803,7 @@ final class RClipEngine(
     * reference's handler calls a nonexistent method and would throw
     * (`rclip_server.py:483`, SURVEY §7.4); implemented as intended. */
   def info(id: Long): Option[(Long, Array[Float])] =
-    activeDf.filter(col(idCol) === id)
+    epoch.get.active.filter(col(idCol) === id)
       .select(col(idCol), col(vecCol))
       .as[(Long, Array[Float])].collect().headOption
 
@@ -802,12 +824,11 @@ final class RClipEngine(
 
   /** M1 — censor: soft-delete by id, gated by key (`rclip_server.py:
     * 423-428`). Commits the deletion set plus `id` as a deletes-only
-    * version (a few bytes, no Spark job) and applies it over the cached
-    * base view: the cache stays, and a built RAM matrix is patched rather
-    * than re-collected. A set that would grow past
-    * [[SnapshotStore.MaxDeletes]] is compacted instead: the full snapshot
-    * rewrite plus [[reload]]. So is a store whose base moved behind the
-    * engine's back. */
+    * version (a few bytes) and sets the next epoch over the same cached
+    * base view and word table, with no Spark job: a built RAM matrix loses
+    * the deleted rows; stats and the ANN index (rebuilt by [[warm]]) go. A
+    * set that would grow past [[SnapshotStore.MaxDeletes]] is compacted
+    * instead (full rewrite plus [[reload]]), as is a moved base. */
   def censor(id: Long, key: String): Boolean =
     if (!censorKey.contains(key)) false
     else synchronized {
@@ -818,30 +839,15 @@ final class RClipEngine(
         reload()
       } else {
         val v = store.delete(idCol, Seq(id))
-        if (v.base == view.base) applyDeletes(v.deletedIds) else reload()
+        if (v.base != epoch.get.base) reload()
+        else epoch.updateAndGet(e =>
+          epochOf(e.gen + 1, e.base, e.cached, v.deletedIds, e.words, e.fast match {
+            case FastBuilt(idx) => FastBuilt(idx.without(v.deletedIds -- e.deleted))
+            case _ => FastUnbuilt
+          }))
       }
       true
     }
-
-  /** Re-point the view at the same cached base with the grown set
-    * `deleted` (no unpersist, no job) and drop what the set invalidates:
-    * stats, the ANN index (rebuilt by the next [[warm]]) and the RAM
-    * matrix rows of the newly deleted ids. A built matrix is replaced by a
-    * row-filtered copy through a CAS; any other fast state becomes
-    * Unbuilt, which also dooms an in-flight build. The view is replaced
-    * first, so a build claimed after the reset collects the new view. */
-  private def applyDeletes(deleted: Set[Long]): Unit = {
-    val gone = deleted -- view.deleted
-    view = viewOf(view.base, view.cached, deleted)
-    statsCache = None
-    annCache.set(RClipEngine.AnnUnbuilt)
-    val patched = fastCache.get() match {
-      case b @ RClipEngine.FastBuilt(idx) =>
-        fastCache.compareAndSet(b, RClipEngine.FastBuilt(idx.without(gone)))
-      case _ => false
-    }
-    if (!patched) fastCache.set(RClipEngine.FastUnbuilt)
-  }
 
   /** M2/A6 — dedup-by-embedding: among rows sharing an identical vector,
     * keep the smallest id, soft-delete the rest. The reference's intended
@@ -932,21 +938,12 @@ object RClipEngine {
     }
   }
 
-  /** The engine's serving view: the cached live rows of data version
-    * `base`, the ids deleted over it, and `active` = `cached` without
-    * those ids. */
-  private final case class View(base: String, cached: DataFrame,
-      deleted: Set[Long], active: DataFrame)
-
   sealed trait FastState
   case object FastUnbuilt extends FastState
   case object FastDisabled extends FastState
   final case class FastBuilt(idx: FastIndex) extends FastState
-  /** In-flight build claim; the token is unique per build so a builder's
-    * installing CAS can only replace its OWN claim — a reload() that
-    * reset the state (or a newer build's claim) makes it fail, which is
-    * what keeps a stale index from ever installing. */
-  final case class FastBuilding(token: Long) extends FastState
+  /** In-flight build claim of epoch generation `gen` (see `claimed`). */
+  final case class FastBuilding(gen: Long) extends FastState
 
   /** Opt-in above-cap ANN serving parameters: `cells`/`nprobe` set the
     * coarse pruning ratio (nprobe/cells of the corpus ADC-scanned per
@@ -966,7 +963,6 @@ object RClipEngine {
       pqIters: Int = 3,
       artifactPath: Option[String] = None,
       driverCodesMaxRows: Long = RClipEngine.DriverCodesMaxRows,
-      buildOnFirstSearch: Boolean = false,
       healthRecallFloorPermille: Long = 800L,
       healthCellSkewMax: Double = 8.0) {
     require(cells > 0, s"cells must be positive, got $cells")
@@ -1032,7 +1028,7 @@ object RClipEngine {
   final case class AnnBuilt(ix: graft.ann.IvfPqIndex,
       codeIdx: Option[CodeIndex]) extends AnnState
   /** See [[FastBuilding]]. */
-  final case class AnnBuilding(token: Long) extends AnnState
+  final case class AnnBuilding(gen: Long) extends AnnState
 
   /** One drift-monitoring row for the live serving index (VERDICT r08
     * next-#4): recall of the serving ANN path vs exact brute over the

@@ -72,16 +72,21 @@ final class TermResolver(
 
   /** Resolve a full query string to its combined unit vector (Q10);
     * None when nothing parses (Q11). */
-  def resolve(q: String): Option[Array[Float]] = {
+  def resolve(q: String): Option[Array[Float]] = resolve(q, stored)
+
+  /** [[resolve]] with the stored-row terms (`image_id`, `random_img`)
+    * looked up in `from`. The LRU does not key on `from`, so every `from`
+    * passed to one resolver must hold the same rows. */
+  def resolve(q: String, from: StoredVectors): Option[Array[Float]] = {
     val terms = QueryParser.parse(q)
     val contribs = terms.flatMap { t =>
-      resolveTerm(t.body).map(v => t.weight -> v)
+      resolveTerm(t.body, from).map(v => t.weight -> v)
     }
     VectorOps.combine(contribs)
   }
 
   /** Resolve one term body (memoized on its text). */
-  def resolveTerm(body: TermBody): Option[Array[Float]] = {
+  private def resolveTerm(body: TermBody, from: StoredVectors): Option[Array[Float]] = {
     val key = body match {
       case JsonTerm(t) => t
       case b           => b.text
@@ -92,24 +97,25 @@ final class TermResolver(
       // computed outside the lock: a miss can run a Spark job (image_id)
       // or a fetch (URL), and concurrent requests must not wait on it. A
       // racing duplicate is pure, so the first insert wins.
-      val v = resolveUncached(body)
+      val v = resolveUncached(body, from)
       val raced = cache.synchronized(cache.putIfAbsent(key, v))
       if (raced != null) raced else v
     }
   }
 
-  private def resolveUncached(body: TermBody): Option[Array[Float]] = body match {
-    case JsonTerm(raw)  => resolveJson(raw)
-    case Group(inner)   =>
-      // Outer parens stripped (Q3) then re-dispatched: the inner text can
-      // itself be a URL, JSON, or plain words (`rclip_server.py:134,144+`).
-      QueryParser.parse(inner) match {
-        case Seq(single) if single.weight == 1.0f => resolveTerm(single.body)
-        case _                                    => resolveText(inner)
-      }
-    case Words(t)  => resolveText(t)
-    case Quoted(t) => resolveText(t)
-  }
+  private def resolveUncached(body: TermBody, from: StoredVectors): Option[Array[Float]] =
+    body match {
+      case JsonTerm(raw)  => resolveJson(raw, from)
+      case Group(inner)   =>
+        // Outer parens stripped (Q3) then re-dispatched: the inner text can
+        // itself be a URL, JSON, or plain words (`rclip_server.py:134,144+`).
+        QueryParser.parse(inner) match {
+          case Seq(single) if single.weight == 1.0f => resolveTerm(single.body, from)
+          case _                                    => resolveText(inner)
+        }
+      case Words(t)  => resolveText(t)
+      case Quoted(t) => resolveText(t)
+    }
 
   private def resolveText(t: String): Option[Array[Float]] =
     if (t.isEmpty) None
@@ -117,14 +123,14 @@ final class TermResolver(
       Some(VectorOps.normalize(embedder.embedImage(fetcher.fetch(t))))
     else Some(embedder.embedText(t)) // Q9
 
-  private def resolveJson(raw: String): Option[Array[Float]] = {
+  private def resolveJson(raw: String, from: StoredVectors): Option[Array[Float]] = {
     val parsed =
       try Some(JsonMethods.parse(raw))
       catch { case _: Throwable => None }
     parsed.flatMap { j =>
       (j \ "image_id") match {
-        case JInt(n)    => stored.byId(n.toLong) // Q5
-        case JLong(n)   => stored.byId(n)
+        case JInt(n)    => from.byId(n.toLong) // Q5
+        case JLong(n)   => from.byId(n)
         case _ =>
           (j \ "clip_embedding") match {
             case JArray(xs) => // Q6: literal vector in the query string
@@ -136,7 +142,7 @@ final class TermResolver(
                 case _           => 0.0f
               }.toArray)
             case _ =>
-              if ((j \ "random_img") != JNothing) stored.random() // Q7
+              if ((j \ "random_img") != JNothing) from.random() // Q7
               else
                 (j \ "random_seed") match {
                   case JInt(n)  => Some(seededUnitVector(n.toLong)) // Q8

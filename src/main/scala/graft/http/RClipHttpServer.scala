@@ -156,16 +156,6 @@ final class RClipHttpServer(
     out
   }
 
-  private def scoredPairs(df: org.apache.spark.sql.DataFrame): java.util.List[Any] = {
-    val out = new java.util.ArrayList[Any]()
-    df.collect().foreach { r =>
-      val pair = new java.util.ArrayList[Any]()
-      pair.add(r.getString(0)); pair.add(r.getDouble(1))
-      out.add(pair)
-    }
-    out
-  }
-
   private def floatList(v: Array[Float]): java.util.List[java.lang.Double] = {
     val l = new java.util.ArrayList[java.lang.Double]()
     v.foreach(x => l.add(java.lang.Double.valueOf(x.toDouble)))

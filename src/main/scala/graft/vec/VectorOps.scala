@@ -151,16 +151,6 @@ object VectorOps {
   // Column-level ops (executor-side scoring)
   // ------------------------------------------------------------------
 
-  /** Dot product of a vector column against a fixed query vector. The
-    * query travels to executors inside the UDF closure (one broadcast of
-    * ~2 KiB), not as a per-row literal. */
-  def dotQuery(v: Column, q: Array[Float]): Column = {
-    val f = udf { (arr: Array[Float]) =>
-      if (arr == null) null else java.lang.Double.valueOf(vecDot(arr, q))
-    }
-    f(v)
-  }
-
   /** Cosine similarity between two vector columns (not assumed unit). */
   val cosineCols: (Column, Column) => Column = {
     val f = udf { (a: Array[Float], b: Array[Float]) =>
@@ -177,22 +167,6 @@ object VectorOps {
       }
     }
     (a: Column, b: Column) => f(a, b)
-  }
-
-  /** L2 norm of a vector column. */
-  def normCol(v: Column): Column = {
-    val f = udf { (arr: Array[Float]) =>
-      if (arr == null) null else java.lang.Double.valueOf(l2norm(arr))
-    }
-    f(v)
-  }
-
-  /** L2-normalize a vector column. */
-  def normalizeCol(v: Column): Column = {
-    val f = udf { (arr: Array[Float]) =>
-      if (arr == null) null else normalize(arr)
-    }
-    f(v)
   }
 
   /** Render a float vector as a SQL DOUBLE[] literal whose parsed value is

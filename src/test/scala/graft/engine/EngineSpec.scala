@@ -597,6 +597,64 @@ class EngineSpec extends SparkSpec {
     assert(fast.count() == n0 - 3 && victims.forall(fast.byId(_).isEmpty))
   }
 
+  test("with the RAM matrix and word map built, a censor and the searches " +
+    "after it run no Spark job, and the censor keeps the word table") {
+    val e = freshEngine()
+    val victim = e.searchRows("label5", 1).head._1
+    val words = e.similarWordsRows("label5", 50)
+    assert(e.fastState.isInstanceOf[RClipEngine.FastBuilt])
+    var rows = Seq.empty[(Long, Double)]
+    var after = Seq.empty[(String, Double)]
+    val jobs = sparkJobs {
+      assert(e.censor(victim, "k"))
+      rows = e.searchRows("label5", 1000)
+      after = e.similarWordsRows("label5", 50)
+    }
+    assert(jobs.isEmpty, s"the post-censor path ran Spark jobs: $jobs")
+    assert(rows.length == e.count() && !rows.exists(_._1 == victim))
+    assert(after == words)
+  }
+
+  test("a long-running engine and a fresh one over the same store agree " +
+    "after each of censor, dedup, upsert and reload") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-epoch").toString
+    val store = new SnapshotStore(dir)
+    store.initFrom(spark, s"$sf/embeddings.parquet")
+    def mk() = new RClipEngine(spark, store, new DeterministicEmbedder(64),
+      censorKey = Some("k"))
+    val long = mk()
+    import spark.implicits._
+    val victims = long.images.filter(col("label") === 5)
+      .select(col("vec_id")).as[Long].collect().sorted.take(3).toSeq
+    val upserted = long.searchRows("label0", 1).head._1
+    assert(victims.length == 3 && !victims.contains(upserted))
+    val panel = Seq(s"""{"image_id": ${victims.head}}""", s"""{"image_id": $upserted}""",
+      "label5 -label6", "label0", """{"random_seed": 3}""")
+    def answers(e: RClipEngine) = panel.map(q =>
+      (e.resolveEmbedding(q).map(_.toSeq), e.searchRows(q, 600), e.similarWordsRows(q, 50)))
+    answers(long) // fills the resolver LRU and derives the word table
+    def agree(step: String): Unit = {
+      val fresh = mk()
+      for (((a, b), q) <- answers(long).zip(answers(fresh)).zip(panel)) {
+        assert(a._1 == b._1, s"after $step: resolveEmbedding($q)")
+        assert(a._2 == b._2, s"after $step: searchRows($q, 600)")
+        assert(a._3 == b._3, s"after $step: similarWordsRows($q, 50)")
+      }
+    }
+    victims.foreach(id => assert(long.censor(id, "k")))
+    agree("censor")
+    long.dedupByEmbedding()
+    agree("dedup")
+    val moved = VectorOps.normalize(Array.tabulate(64)(i => if (i % 2 == 0) 1f else -0.5f))
+    long.upsert(store.read(spark).filter(col("vec_id") === upserted)
+      .withColumn("embedding", typedLit(moved)), "vec_id")
+    assert(long.byId(upserted).map(_.toSeq).contains(moved.toSeq))
+    agree("upsert")
+    store.write(store.read(spark).filter(col("vec_id") % 7 =!= 0))
+    long.reload()
+    agree("reload")
+  }
+
   test("SnapshotStore: prune keeps every base a kept deletes-only version " +
     "reads") {
     val dir = java.nio.file.Files.createTempDirectory("graft-prune-base").toString
