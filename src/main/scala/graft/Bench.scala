@@ -358,31 +358,17 @@ object Bench {
     System.out.flush()
   }
 
-  /** Serving-latency section (VERDICT r06 missing-#2): warm per-REQUEST
-    * p50/p95 of the engine façade's `search(q, 12)` — the reference's
-    * actual interactive workload (`rclip_server.py:386-393`), a number
-    * the per-QUERY walls above cannot see — measured on both paths:
-    * the driver-resident RAM-matrix fast path (the reference's own
-    * serving regime, sub-millisecond target) and the distributed scored
-    * scan (pays the ~0.1 s local job-dispatch floor; the regime past
-    * [[graft.engine.RClipEngine.FastPathMaxRows]]). 10 rotating queries,
-    * 200/100 timed requests after warmup. */
+  /** Serving-latency section: warm per-REQUEST p50/p95 of `searchRows(q,
+    * 12)` in the two ABOVE-CAP ANN regimes, with the brute RAM-matrix
+    * fast path disabled (the brute regimes are measured end to end over
+    * HTTP at the reference's `num=1000` request shape by `perfbench`).
+    * 10 rotating queries, 100 timed requests each after warmup. */
   def microServing(spark: SparkSession, sfDir: String): Seq[(String, Double)] = {
     val dir = java.nio.file.Files
       .createTempDirectory("graft-bench-serving").toString
     val store = new graft.engine.SnapshotStore(dir)
     store.initFrom(spark, s"$sfDir/embeddings.parquet")
     val emb = new graft.embed.DeterministicEmbedder(64)
-    val fast = new graft.engine.RClipEngine(spark, store, emb)
-    val dist = new graft.engine.RClipEngine(spark, store, emb,
-      fastPathMaxRows = 0L)
-    // regime guard (ADVICE r07): the serving_fast/rows numbers claim the
-    // RAM-matrix path — if a bench corpus ever outgrows the cap they'd
-    // silently measure the distributed path under a fast label. Assert
-    // the regime instead of trusting it.
-    require(fast.count() <= graft.engine.RClipEngine.FastPathMaxRows,
-      s"bench corpus ${fast.count()} rows exceeds FastPathMaxRows — " +
-        "serving_fast would not measure the fast path")
     val queries = (0 until 10).map(i => s"label$i")
     def run(n: Int)(req: String => Unit): IndexedSeq[Double] = {
       queries.foreach(req) // warm path + caches
@@ -396,28 +382,16 @@ object Bench {
     def pct(xs: IndexedSeq[Double], p: Double): Double =
       xs(math.min(xs.length - 1, (p * xs.length).toInt))
     spark.sparkContext.setJobDescription("micro-serving")
-    // the interactive number: typed rows off the RAM matrix (what
-    // /search_api actually serves — no DataFrame, no planner)
-    val r = run(500)(q => { fast.searchRows(q, 12); () })
-    // the DataFrame façade on both regimes (fast = 12-row local plan,
-    // dist = one scored-scan Spark job)
-    val f = run(200)(q => { fast.search(q, 12).collect(); () })
-    val d = run(100)(q => { dist.search(q, 12).collect(); () })
-    // the ABOVE-CAP ANN regimes (VERDICT r07 next-#2): same corpus,
-    // brute fast path disabled, searches served from the persisted
-    // IVF-PQ index in both coarse modes (bit-identical results,
-    // EngineSpec-pinned):
+    // searches served from the persisted IVF-PQ index in both coarse
+    // modes (bit-identical results, EngineSpec-pinned):
     //  - serving_ann: RAM-COARSE — the 8 B/row packed codes live on the
     //    driver, the coarse cut is pure arithmetic, ONE Spark job does
-    //    the exact rerank over an isin-restricted scan. Compare against
-    //    serving_dist (the brute scan it replaces): one dispatch each,
-    //    but the rerank touches coarseK rows, not the corpus.
+    //    the exact rerank over an isin-restricted scan.
     //  - serving_ann_dist: DISTRIBUTED coarse — pruned artifact ADC
-    //    scan + broadcast rerank = two dispatches; at bench scale
-    //    dispatch dominates so it reads slower than serving_dist. Its
-    //    win is scan BYTES (nprobe/cells of the corpus at 8 B/row vs
-    //    all of it at 256 B/row) — decisive past driverCodesMaxRows,
-    //    invisible below. The entry pins the fixed per-request cost.
+    //    scan + broadcast rerank = two dispatches. Its win is scan BYTES
+    //    (nprobe/cells of the corpus at 8 B/row vs all of it at 256
+    //    B/row) — decisive past driverCodesMaxRows, invisible below. The
+    //    entry pins the fixed per-request cost.
     val annParams = graft.engine.RClipEngine.AnnServing(
       cells = 8, nprobe = 6, m = 16, coarseK = 192,
       artifactPath = Some(s"$dir/annidx"))
@@ -446,9 +420,6 @@ object Bench {
     val a = run(100)(q => { ann.searchRows(q, 12); () })
     val ad = run(100)(q => { annDist.searchRows(q, 12); () })
     val out = Seq(
-      "serving_rows_p50" -> pct(r, 0.50), "serving_rows_p95" -> pct(r, 0.95),
-      "serving_fast_p50" -> pct(f, 0.50), "serving_fast_p95" -> pct(f, 0.95),
-      "serving_dist_p50" -> pct(d, 0.50), "serving_dist_p95" -> pct(d, 0.95),
       "serving_ann_warm_sec" -> annWarmSec,
       "serving_ann_first_req" -> annFirstSec,
       "serving_ann_p50" -> pct(a, 0.50), "serving_ann_p95" -> pct(a, 0.95),

@@ -14,12 +14,15 @@ import graft.vec.VectorOps
   *
   * — the standard deployment shape of large-scale ANN systems (coarse
   * quantizer + product codes + optional exact refine), which n07 proves
-  * in-query; this class is the persisted form. [[IvfIndex]] saves
-  * cell-partitioned RAW vectors (nprobe pruning, full scan cost inside
-  * probed cells) and [[PqIndex]] saves packed codes WITHOUT cell layout
-  * (32× smaller scan, but every row scored); composing them multiplies
-  * the two savings: at 100 TB with 1024 cells / nprobe 8, the ADC pass
-  * reads 8/1024 of 1/32 of the corpus bytes.
+  * in-query; this class is the persisted form and the only PQ artifact.
+  * [[IvfIndex]] saves cell-partitioned RAW vectors (nprobe pruning, full
+  * scan cost inside probed cells); packed codes ([[PqIndex]]'s
+  * primitives) make the scan 32× smaller but score every row; composing
+  * them multiplies the two savings: at 100 TB with 1024 cells / nprobe
+  * 8, the ADC pass reads 8/1024 of 1/32 of the corpus bytes. With
+  * `cells = 1` (and `ivfIters = 0`) the index is a plain codes-only PQ
+  * index: one cell, and `searchAdc(q, k, nprobe = 1)` is the full ADC
+  * scan.
   *
   * Composition choices, pinned so the artifact is spec-assertable
   * against n07's in-query math:

@@ -1,23 +1,20 @@
 package graft.ann
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.vec.VectorOps
 
-/** Product-quantization index — the MEMORY-bound ANN artifact that
-  * complements [[IvfIndex]]'s compute/IO pruning: the corpus embeddings
-  * are compressed to `m` per-subspace centroid codes bit-packed into a
-  * single BIGINT (m=16, k=16 turns a 64-dim fp32 row from 256 B into
-  * 8 B — 32×), and search scans ONLY the packed-code column with
-  * asymmetric-distance (ADC) scoring — the query side stays exact via a
-  * driver-computed `m×k` dot-product lookup table. At 100 TB this is
-  * the difference between scanning 100 TB of raw vectors and ~3 TB of
-  * codes; the standard IVF-PQ composition probes cells with
-  * [[IvfIndex]] and reranks the survivors with the exact vectors (the
-  * n05 rerank pattern).
-  *
-  * Design:
-  *  - `train`: per-subspace Lloyd k-means entirely on the DRIVER over a
+/** Product-quantization primitives on the driver — the MEMORY-bound ANN
+  * side that complements [[IvfIndex]]'s compute/IO pruning. The corpus
+  * embeddings are compressed to `m` per-subspace centroid codes
+  * bit-packed into a single BIGINT by the codegen `vec_pq_encode_packed`
+  * (m=16, k=16 turns a 64-dim fp32 row from 256 B into 8 B — 32×), and
+  * a search scans ONLY that code column with asymmetric-distance (ADC)
+  * scoring (`vec_pq_adc_packed`); the query side stays exact via the
+  * driver-computed `m×k` dot-product lookup table [[lut]]. The persisted
+  * artifact is [[IvfPqIndex]] (`cells = 1` is a plain codes-only PQ
+  * index); this object holds what it and the engine's RAM-coarse regime
+  * share:
+  *  - [[train]]: per-subspace Lloyd k-means entirely on the DRIVER over a
   *    bounded sample (PQ codebooks saturate at a few 10⁵ training
   *    points regardless of corpus size, so the sample — taken
   *    deterministically as the first `sampleN` rows in id order — is the
@@ -25,65 +22,14 @@ import graft.vec.VectorOps
   *    distributed iteration at all). Deterministic: init = sub-vectors
   *    of the first k sample rows, argmin ties → lowest index, empty
   *    clusters keep their centroid (IvfIndex's conventions).
-  *  - `build`: ONE narrow distributed pass — the codegen
-  *    `vec_pq_encode_packed` expression against the flat codebook
-  *    literal, emitting all m codes bit-packed into a single BIGINT
-  *    (m=16, k=16 → 64 bits exactly: the stored row is (id, code) =
-  *    16 bytes, vs 256 B of raw fp32 — the real 32× the ADC scan
-  *    claims, not an array column's ~4×). No shuffle; the raw vectors
-  *    are read once and never again.
-  *  - `search`: ADC top-k over the packed-code scan via codegen
-  *    `vec_pq_adc_packed` (m shift-mask extractions + LUT adds per
-  *    row) + `TakeOrderedAndProject` — zero Exchange, k-bounded driver
-  *    merge, same plan skeleton as the exact flagship but over 8-byte
-  *    rows.
-  *  - `save`/`load`: codes parquet + flat-codebook sidecar, so a cluster
-  *    restart reuses the artifact without retraining or re-encoding.
+  *  - [[lut]]: the query's ADC lookup table.
+  *  - [[adcPacked]]: the driver twin of the ADC kernel.
   *
   * Scores are ADC approximations of dot(q, x) (exact on the query side,
   * centroid-quantized on the corpus side); AnnPqSpec pins the recall
   * floor against the exact top-k and the exact-arithmetic parity of
   * both kernels.
   */
-final class PqIndex(
-    val m: Int,
-    val k: Int,
-    val flatCodebook: Array[Float],
-    val codes: DataFrame,
-    idCol: String) {
-
-  require(flatCodebook.length % (m * k) == 0,
-    s"flat codebook length ${flatCodebook.length} is not a multiple of m·k = ${m * k}")
-
-  /** Driver-side ADC lookup table for a query: lut[mm·k + j] =
-    * dot(q_mm, centroid_mmj) (see [[PqIndex.lut]]). */
-  def lutOf(q: Array[Float]): Array[Double] =
-    PqIndex.lut(flatCodebook, m, k, q)
-
-  /** ADC top-k: one packed-code-column scan, zero shuffle. `+ 0.0`
-    * normalizes -0.0 → 0.0 so tie ordering near zero matches the
-    * engine's oracle-normalized score convention (n05/n06/n07). */
-  def search(q: Array[Float], topk: Int): DataFrame =
-    codes
-      .select(col(idCol),
-        (round(VectorOps.pqAdcPacked(col("code"), lutOf(q), m, k), 4) + lit(0.0))
-          .as("score"))
-      .orderBy(col("score").desc, col(idCol).asc)
-      .limit(topk)
-
-  /** Persist codes + codebook sidecar. The sidecar carries idCol too,
-    * so the artifact is self-describing — a load() must not depend on
-    * the caller remembering which id column the index was built on. */
-  def save(path: String): Unit = {
-    codes.write.mode("overwrite").parquet(s"$path/codes")
-    val spark = codes.sparkSession
-    import spark.implicits._
-    Seq((m, k, flatCodebook.toSeq, idCol))
-      .toDF("m", "k", "flat_codebook", "id_col")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/codebook")
-  }
-}
-
 object PqIndex {
 
   /** Driver twin of the `vec_pq_adc_packed` expression: identical
@@ -189,37 +135,5 @@ object PqIndex {
       mm += 1
     }
     flat
-  }
-
-  /** Train + encode: the artifact build. Codes are materialized (built
-    * once, scanned many times). */
-  def build(df: DataFrame, m: Int = 8, k: Int = 16, iters: Int = 5,
-      sampleN: Int = 2048, idCol: String = "vec_id",
-      vecCol: String = "embedding"): PqIndex = {
-    val spark = df.sparkSession
-    VectorOps.ensureRegistered(spark)
-    val flat = train(df, m, k, iters, sampleN, idCol, vecCol)
-    val codes = df
-      .select(col(idCol),
-        VectorOps.pqEncodePacked(col(vecCol), flat, m, k).as("code"))
-      .cache()
-    codes.count()
-    new PqIndex(m, k, flat, codes, idCol)
-  }
-
-  /** Reload a saved artifact in a fresh session (the sidecar carries
-    * m, k, the codebook, and the id column — fully self-describing).
-    * A sidecar missing `id_col` is treated as corrupt and fails loudly:
-    * every save() has written it, so no legacy artifacts exist. */
-  def load(spark: SparkSession, path: String): PqIndex = {
-    VectorOps.ensureRegistered(spark)
-    import spark.implicits._
-    val sidecar = spark.read.parquet(s"$path/codebook")
-    require(sidecar.columns.contains("id_col"),
-      s"PqIndex.load: sidecar at $path/codebook has no id_col — corrupt or truncated artifact")
-    val (m, k, flat, idCol) = sidecar
-      .select(col("m"), col("k"), col("flat_codebook"), col("id_col"))
-      .as[(Int, Int, Seq[Float], String)].head()
-    new PqIndex(m, k, flat.toArray, spark.read.parquet(s"$path/codes"), idCol)
   }
 }

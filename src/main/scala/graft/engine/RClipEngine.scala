@@ -76,12 +76,19 @@ final class RClipEngine(
       base: String,
       cached: DataFrame,
       deleted: Set[Long],
-      active: DataFrame,
       words: Words,
       resolver: TermResolver,
       stats: Option[(Array[Double], Array[Double])],
       fast: FastState,
       ann: AnnState) extends StoredVectors {
+
+    /** `cached` minus `deleted` (a null id is kept, as
+      * [[SnapshotStore.markDeleted]]'s fold keeps it). Lazy because
+      * building it makes Spark analyze an `isin` over the whole set, and
+      * a censor over a built RAM matrix never reads it. */
+    lazy val active: DataFrame =
+      if (deleted.isEmpty) cached
+      else cached.filter(col(idCol).isNull || !col(idCol).isin(deleted.toSeq.sorted: _*))
 
     def resolve(q: String): Option[Array[Float]] = resolver.resolve(q, this)
 
@@ -195,14 +202,10 @@ final class RClipEngine(
     epochOf(gen, version.base, cached, version.deletedIds, words, FastUnbuilt)
   }
 
-  /** A new generation: a fresh resolver LRU, no stats, no ANN index, and
-    * the active view = `cached` minus `deleted` (a null id is kept, as
-    * [[SnapshotStore.markDeleted]]'s fold keeps it). */
+  /** A new generation: a fresh resolver LRU, no stats and no ANN index. */
   private def epochOf(gen: Long, base: String, cached: DataFrame, deleted: Set[Long],
       words: Words, fast: FastState): Epoch =
     Epoch(gen, base, cached, deleted,
-      if (deleted.isEmpty) cached
-      else cached.filter(col(idCol).isNull || !col(idCol).isin(deleted.toSeq.sorted: _*)),
       words, new TermResolver(words.embedder, this), None, fast,
       if (annServing.isEmpty) AnnDisabled else AnnUnbuilt)
 
@@ -832,13 +835,14 @@ final class RClipEngine(
   def censor(id: Long, key: String): Boolean =
     if (!censorKey.contains(key)) false
     else synchronized {
-      val pending = store.head.fold(Set.empty[Long])(_.deletedIds) + id
+      val head = store.head
+      val pending = head.fold(Set.empty[Long])(_.deletedIds) + id
       if (pending.size > SnapshotStore.MaxDeletes) {
         store.write(SnapshotStore.markDeleted(store.read(spark),
           SnapshotStore.Deletes(idCol, Set(id))))
         reload()
       } else {
-        val v = store.delete(idCol, Seq(id))
+        val v = store.delete(idCol, Seq(id), head)
         if (v.base != epoch.get.base) reload()
         else epoch.updateAndGet(e =>
           epochOf(e.gen + 1, e.base, e.cached, v.deletedIds, e.words, e.fast match {

@@ -97,10 +97,12 @@ final class SnapshotStore(val root: String) {
 
   /** Commit `ids`, together with every id the newest version already
     * deletes, as a deletes-only version over the newest version's base,
-    * and return it. The cumulative set must stay within [[MaxDeletes]];
-    * past it, fold the set into a full [[write]] instead. */
-  def delete(idCol: String, ids: Iterable[Long]): Version = {
-    val cur = head.getOrElse(throw new IllegalStateException(s"no committed snapshot under $root"))
+    * and return it. `newest` defaults to [[head]]; a caller that has just
+    * read the head passes it and saves a second scan of the version
+    * directories. The cumulative set must stay within
+    * [[MaxDeletes]]; past it, fold the set into a full [[write]] instead. */
+  def delete(idCol: String, ids: Iterable[Long], newest: Option[Version] = head): Version = {
+    val cur = newest.getOrElse(throw new IllegalStateException(s"no committed snapshot under $root"))
     cur.deletes.foreach(d => require(d.idCol == idCol,
       s"deletion set of ${cur.dir} is keyed by ${d.idCol}, not $idCol"))
     val all = cur.deletedIds ++ ids

@@ -339,192 +339,18 @@ object VectorExpressions {
   /** Product-quantization encode — the 100 TB memory-bound ANN kernel:
     * split the d-dim vector into `m` subspaces, assign each sub-vector
     * to its nearest of `k` per-subspace centroids (L2², argmin, ties →
-    * lowest index), emit the `m` small codes. With m=8, k=16 a 64-dim
-    * fp32 embedding (256 B) becomes 8 codes — the ADC scan then reads
-    * codes instead of raw vectors. The codebook rides as ONE flat
-    * `ARRAY<FLOAT>` literal laid out `[(mm·k + j)·sub + dd]` so the
-    * generated loop is plain index math over a single ArrayData (no
-    * nested-array traversal in codegen). Distances accumulate in Double
-    * in index order — the DuckDB oracle reproduces them bit-exactly, so
-    * the argmin (and every code) matches across engines. */
-  /** Shared interpreted PQ-encode kernel (both encode expressions
-    * delegate here — one argmin implementation, one error surface).
-    * Null/dims checks run ONCE over the m·sub prefix, not inside the
-    * k-way centroid loop. */
-  private[expr] def pqEncodeCodes(x: ArrayData, cb: ArrayData,
-      m: Int, k: Int, name: String): Array[Int] = {
-    val sub = cb.numElements() / (m * k)
-    if (x.numElements() != m * sub)
-      throw new IllegalArgumentException(
-        s"$name: vector has ${x.numElements()} dims, codebook expects exactly ${m * sub}")
-    var i = 0
-    while (i < m * sub) {
-      if (x.isNullAt(i))
-        throw new IllegalArgumentException(
-          s"$name: null element at index $i — embedding arrays must be dense")
-      i += 1
-    }
-    val codes = new Array[Int](m)
-    var mm = 0
-    while (mm < m) {
-      var best = 0; var bestD = java.lang.Double.MAX_VALUE
-      var j = 0
-      while (j < k) {
-        var dist = 0.0
-        val xo = mm * sub; val co = (mm * k + j) * sub
-        var dd = 0
-        while (dd < sub) {
-          val diff = x.getFloat(xo + dd).toDouble - cb.getFloat(co + dd).toDouble
-          dist += diff * diff
-          dd += 1
-        }
-        if (dist < bestD) { bestD = dist; best = j }
-        j += 1
-      }
-      codes(mm) = best
-      mm += 1
-    }
-    codes
-  }
-
-  /** Shared codegen template for the PQ argmin loops: emits the dims
-    * check, ONE null-check pass over the m·sub prefix, and the 3-level
-    * argmin; `emitPerSubspace(mm, best)` stores each subspace's winner
-    * (the only line the two encode expressions differ in). */
-  private def pqEncodeLoop(ctx: CodegenContext, a: String, cb: String,
-      m: Int, k: Int, name: String)(
-      emitPerSubspace: (String, String) => String): String = {
-    val sub = ctx.freshName("sub"); val nc = ctx.freshName("nc")
-    val mm = ctx.freshName("mm"); val j = ctx.freshName("j")
-    val dd = ctx.freshName("dd"); val dist = ctx.freshName("dist")
-    val best = ctx.freshName("best"); val bestD = ctx.freshName("bestD")
-    val xo = ctx.freshName("xo"); val co = ctx.freshName("co")
-    val diff = ctx.freshName("diff")
-    s"""int $sub = $cb.numElements() / ${m * k};
-       |if ($a.numElements() != $m * $sub)
-       |  throw new IllegalArgumentException(
-       |    "$name: vector has " + $a.numElements() +
-       |    " dims, codebook expects exactly " + ($m * $sub));
-       |for (int $nc = 0; $nc < $m * $sub; $nc++) {
-       |  if ($a.isNullAt($nc))
-       |    throw new IllegalArgumentException(
-       |      "$name: null element at index " + $nc +
-       |      " — embedding arrays must be dense");
-       |}
-       |for (int $mm = 0; $mm < $m; $mm++) {
-       |  int $best = 0; double $bestD = java.lang.Double.MAX_VALUE;
-       |  for (int $j = 0; $j < $k; $j++) {
-       |    double $dist = 0.0;
-       |    int $xo = $mm * $sub; int $co = ($mm * $k + $j) * $sub;
-       |    for (int $dd = 0; $dd < $sub; $dd++) {
-       |      double $diff = (double) $a.getFloat($xo + $dd)
-       |                   - (double) $cb.getFloat($co + $dd);
-       |      $dist += $diff * $diff;
-       |    }
-       |    if ($dist < $bestD) { $bestD = $dist; $best = $j; }
-       |  }
-       |  ${emitPerSubspace(mm, best)}
-       |}""".stripMargin
-  }
-
-  case class VecPqEncode(left: Expression, right: Expression, m: Int, k: Int)
-      extends BinaryExpression with ExpectsInputTypes {
-    override def inputTypes: Seq[DataType] =
-      Seq(ArrayType(FloatType), ArrayType(FloatType))
-    override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-    override def prettyName: String = "vec_pq_encode"
-
-    override def nullSafeEval(a: Any, b: Any): Any =
-      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
-        .fromPrimitiveArray(pqEncodeCodes(a.asInstanceOf[ArrayData],
-          b.asInstanceOf[ArrayData], m, k, prettyName))
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, cb) => {
-        val codes = ctx.freshName("codes")
-        s"""int[] $codes = new int[$m];
-           |${pqEncodeLoop(ctx, a, cb, m, k, prettyName) {
-                (mm, best) => s"$codes[$mm] = $best;"
-              }}
-           |${ev.value} = org.apache.spark.sql.catalyst.expressions
-           |  .UnsafeArrayData.fromPrimitiveArray($codes);""".stripMargin
-      })
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** Asymmetric-distance (ADC) score over PQ codes: the query side stays
-    * exact — `lut[(mm·k) + j] = dot(q_mm, centroid_mmj)` is precomputed
-    * on the driver — and the corpus side is the `m` table lookups per
-    * row. This is the scan that makes PQ pay at 100 TB: it never touches
-    * the raw vectors, only the m-code column. Out-of-range codes fail
-    * loudly (a corrupt code would otherwise read a neighboring
-    * subspace's entry and silently mis-score). */
-  case class VecPqAdc(left: Expression, right: Expression, k: Int)
-      extends BinaryExpression with ExpectsInputTypes {
-    override def inputTypes: Seq[DataType] =
-      Seq(ArrayType(IntegerType), ArrayType(DoubleType))
-    override def dataType: DataType = DoubleType
-    override def prettyName: String = "vec_pq_adc"
-
-    override def nullSafeEval(a: Any, b: Any): Any = {
-      val codes = a.asInstanceOf[ArrayData]
-      val lut = b.asInstanceOf[ArrayData]
-      val n = codes.numElements()
-      var acc = 0.0
-      var mm = 0
-      while (mm < n) {
-        if (codes.isNullAt(mm))
-          throw new IllegalArgumentException(
-            s"vec_pq_adc: null code at subspace $mm — code arrays must be dense")
-        val c = codes.getInt(mm)
-        val idx = mm * k + c
-        if (c < 0 || c >= k || idx >= lut.numElements())
-          throw new IllegalArgumentException(
-            s"vec_pq_adc: code $c at subspace $mm out of range (k=$k, lut=${lut.numElements()})")
-        acc += lut.getDouble(idx)
-        mm += 1
-      }
-      acc
-    }
-
-    override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-      nullSafeCodeGen(ctx, ev, (a, b) => {
-        val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
-        val mm = ctx.freshName("mm"); val c = ctx.freshName("c")
-        val idx = ctx.freshName("idx")
-        s"""int $n = $a.numElements();
-           |double $acc = 0.0;
-           |for (int $mm = 0; $mm < $n; $mm++) {
-           |  if ($a.isNullAt($mm))
-           |    throw new IllegalArgumentException(
-           |      "vec_pq_adc: null code at subspace " + $mm +
-           |      " — code arrays must be dense");
-           |  int $c = $a.getInt($mm);
-           |  int $idx = $mm * $k + $c;
-           |  if ($c < 0 || $c >= $k || $idx >= $b.numElements())
-           |    throw new IllegalArgumentException(
-           |      "vec_pq_adc: code " + $c + " at subspace " + $mm +
-           |      " out of range (k=" + $k + ", lut=" + $b.numElements() + ")");
-           |  $acc += $b.getDouble($idx);
-           |}
-           |${ev.value} = $acc;""".stripMargin
-      })
-
-    override protected def withNewChildrenInternal(
-        newLeft: Expression, newRight: Expression): Expression =
-      copy(left = newLeft, right = newRight)
-  }
-
-  /** Packed variant of [[VecPqEncode]]: the m codes bit-packed into ONE
-    * BIGINT (code mm occupies bits [mm·b, (mm+1)·b), b = ⌈log₂k⌉) — the
-    * storage form the 32× compression claim actually needs: an
-    * `ARRAY<INT>` codes column costs ~4 B/code plus array overhead,
-    * a packed BIGINT is exactly 8 bytes and parquet bit-packs it
-    * further. Requires m·b ≤ 64 (m=16,k=16 → 64 bits exactly; the
-    * classic m=8,k=256 → 64 bits too). */
+    * lowest index), and bit-pack the `m` codes into ONE BIGINT (code mm
+    * occupies bits [mm·b, (mm+1)·b), b = ⌈log₂k⌉). A packed word is
+    * exactly 8 bytes — a 64-dim fp32 embedding (256 B) becomes 8 B, the
+    * 32× the ADC scan claims — and parquet bit-packs it further. Requires
+    * m·b ≤ 64 (m=16,k=16 → 64 bits exactly; the classic m=8,k=256 → 64
+    * bits too). The codebook rides as ONE flat `ARRAY<FLOAT>` literal
+    * laid out `[(mm·k + j)·sub + dd]` so the generated loop is plain
+    * index math over a single ArrayData (no nested-array traversal in
+    * codegen). Distances accumulate in Double in index order — the DuckDB
+    * oracle reproduces them bit-exactly, so the argmin (and every code)
+    * matches across engines. Null/dims checks run ONCE over the m·sub
+    * prefix, not inside the k-way centroid loop. */
   case class VecPqEncodePacked(left: Expression, right: Expression, m: Int, k: Int)
       extends BinaryExpression with ExpectsInputTypes {
     private val bits = 32 - java.lang.Integer.numberOfLeadingZeros(k - 1)
@@ -536,12 +362,37 @@ object VectorExpressions {
     override def prettyName: String = "vec_pq_encode_packed"
 
     override def nullSafeEval(a: Any, b: Any): Any = {
-      val codes = pqEncodeCodes(a.asInstanceOf[ArrayData],
-        b.asInstanceOf[ArrayData], m, k, prettyName)
+      val x = a.asInstanceOf[ArrayData]
+      val cb = b.asInstanceOf[ArrayData]
+      val sub = cb.numElements() / (m * k)
+      if (x.numElements() != m * sub)
+        throw new IllegalArgumentException(
+          s"$prettyName: vector has ${x.numElements()} dims, codebook expects exactly ${m * sub}")
+      var i = 0
+      while (i < m * sub) {
+        if (x.isNullAt(i))
+          throw new IllegalArgumentException(
+            s"$prettyName: null element at index $i — embedding arrays must be dense")
+        i += 1
+      }
       var packed = 0L
       var mm = 0
       while (mm < m) {
-        packed |= codes(mm).toLong << (mm * bits)
+        var best = 0; var bestD = java.lang.Double.MAX_VALUE
+        var j = 0
+        while (j < k) {
+          var dist = 0.0
+          val xo = mm * sub; val co = (mm * k + j) * sub
+          var dd = 0
+          while (dd < sub) {
+            val diff = x.getFloat(xo + dd).toDouble - cb.getFloat(co + dd).toDouble
+            dist += diff * diff
+            dd += 1
+          }
+          if (dist < bestD) { bestD = dist; best = j }
+          j += 1
+        }
+        packed |= best.toLong << (mm * bits)
         mm += 1
       }
       packed
@@ -549,11 +400,38 @@ object VectorExpressions {
 
     override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
       nullSafeCodeGen(ctx, ev, (a, cb) => {
-        val packed = ctx.freshName("packed")
-        s"""long $packed = 0L;
-           |${pqEncodeLoop(ctx, a, cb, m, k, prettyName) {
-                (mm, best) => s"$packed |= ((long) $best) << ($mm * $bits);"
-              }}
+        val sub = ctx.freshName("sub"); val nc = ctx.freshName("nc")
+        val mm = ctx.freshName("mm"); val j = ctx.freshName("j")
+        val dd = ctx.freshName("dd"); val dist = ctx.freshName("dist")
+        val best = ctx.freshName("best"); val bestD = ctx.freshName("bestD")
+        val xo = ctx.freshName("xo"); val co = ctx.freshName("co")
+        val diff = ctx.freshName("diff"); val packed = ctx.freshName("packed")
+        s"""int $sub = $cb.numElements() / ${m * k};
+           |if ($a.numElements() != $m * $sub)
+           |  throw new IllegalArgumentException(
+           |    "$prettyName: vector has " + $a.numElements() +
+           |    " dims, codebook expects exactly " + ($m * $sub));
+           |for (int $nc = 0; $nc < $m * $sub; $nc++) {
+           |  if ($a.isNullAt($nc))
+           |    throw new IllegalArgumentException(
+           |      "$prettyName: null element at index " + $nc +
+           |      " — embedding arrays must be dense");
+           |}
+           |long $packed = 0L;
+           |for (int $mm = 0; $mm < $m; $mm++) {
+           |  int $best = 0; double $bestD = java.lang.Double.MAX_VALUE;
+           |  for (int $j = 0; $j < $k; $j++) {
+           |    double $dist = 0.0;
+           |    int $xo = $mm * $sub; int $co = ($mm * $k + $j) * $sub;
+           |    for (int $dd = 0; $dd < $sub; $dd++) {
+           |      double $diff = (double) $a.getFloat($xo + $dd)
+           |                   - (double) $cb.getFloat($co + $dd);
+           |      $dist += $diff * $diff;
+           |    }
+           |    if ($dist < $bestD) { $bestD = $dist; $best = $j; }
+           |  }
+           |  $packed |= ((long) $best) << ($mm * $bits);
+           |}
            |${ev.value} = $packed;""".stripMargin
       })
 
@@ -562,8 +440,14 @@ object VectorExpressions {
       copy(left = newLeft, right = newRight)
   }
 
-  /** ADC over a PACKED code word: m nibble/byte extractions + LUT adds
-    * per row — the scan kernel for [[VecPqEncodePacked]] storage. */
+  /** Asymmetric-distance (ADC) score over a packed code word: the query
+    * side stays exact — `lut[(mm·k) + j] = dot(q_mm, centroid_mmj)` is
+    * precomputed on the driver — and the corpus side is `m` nibble/byte
+    * extractions + LUT adds per row, summed in ascending-subspace order.
+    * This is the scan that makes PQ pay at 100 TB: it never touches the
+    * raw vectors, only the 8-byte code column. Out-of-range codes fail
+    * loudly (a corrupt code would otherwise read a neighboring
+    * subspace's entry and silently mis-score). */
   case class VecPqAdcPacked(left: Expression, right: Expression, m: Int, k: Int)
       extends BinaryExpression with ExpectsInputTypes {
     private val bits = 32 - java.lang.Integer.numberOfLeadingZeros(k - 1)
@@ -763,15 +647,6 @@ object VectorExpressions {
       new ExpressionInfo(classOf[StrSortedInterSize].getName, "gram_inter_sorted"),
       arity("gram_inter_sorted", 2)(args =>
         StrSortedInterSize(args(0), args(1)))),
-    (FunctionIdentifier("vec_pq_encode"),
-      new ExpressionInfo(classOf[VecPqEncode].getName, "vec_pq_encode"),
-      arity("vec_pq_encode", 4)(args =>
-        VecPqEncode(args(0), args(1), litInt(args(2), "vec_pq_encode(m)"),
-          litInt(args(3), "vec_pq_encode(k)")))),
-    (FunctionIdentifier("vec_pq_adc"),
-      new ExpressionInfo(classOf[VecPqAdc].getName, "vec_pq_adc"),
-      arity("vec_pq_adc", 3)(args =>
-        VecPqAdc(args(0), args(1), litInt(args(2), "vec_pq_adc(k)")))),
     (FunctionIdentifier("vec_pq_encode_packed"),
       new ExpressionInfo(classOf[VecPqEncodePacked].getName, "vec_pq_encode_packed"),
       arity("vec_pq_encode_packed", 4)(args =>

@@ -180,8 +180,7 @@ object AnnQueries {
   val n13_ivf_balance: Q = (s, d) => {
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val idx = graft.ann.IvfIndex.build(emb, cells = 8, iters = 0)
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft-n13-ivf-" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + s"-${ProcessHandle.current().pid()}"
+    val tmp = scratchDir("n13-ivf", d)
     idx.save(tmp)
     idx.indexed.unpersist()
     val loaded = graft.ann.IvfIndex.load(s, tmp)
@@ -196,19 +195,23 @@ object AnnQueries {
       .orderBy(col("cell"))
   }
 
+  /** The overwrite-save directory of an artifact operator:
+    * `${java.io.tmpdir}/graft-<tag>-<sanitized d>-<pid>`. Stable per
+    * (dataset, JVM): repeated runs WITHIN a process (bench warms + times
+    * each query three times) reuse one directory instead of accumulating
+    * a copy per invocation, while the pid keeps concurrent JVMs from
+    * overwriting an artifact another process is lazily reading (and the
+    * sanitized dir name, unlike a bare hashCode, cannot alias two
+    * different corpora). */
+  private def scratchDir(tag: String, d: String): String =
+    s"${System.getProperty("java.io.tmpdir")}/graft-$tag-" +
+      d.replaceAll("[^A-Za-z0-9.]", "_") + s"-${ProcessHandle.current().pid()}"
+
   val n04_ivf_artifact: Q = (s, d) => {
     val q = VectorQueries.flagshipVec
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val idx = graft.ann.IvfIndex.build(emb, cells = 8, iters = 0)
-    // stable per-(dataset, JVM) path + overwrite save: repeated runs
-    // WITHIN a process (bench warms + times n04 three times) reuse one
-    // artifact directory instead of accumulating an embeddings copy per
-    // invocation, while the pid component keeps concurrent/orphaned JVMs
-    // from overwriting an artifact another process is lazily reading
-    // (and the sanitized dir name, unlike a bare hashCode, cannot alias
-    // two different corpora)
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft-n04-ivf-" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + s"-${ProcessHandle.current().pid()}"
+    val tmp = scratchDir("n04-ivf", d)
     idx.save(tmp)
     idx.indexed.unpersist()
     val loaded = graft.ann.IvfIndex.load(s, tmp)
@@ -247,14 +250,16 @@ object AnnQueries {
 
   /** n06: product-quantization ADC search — the MEMORY-bound scale path
     * v06's scalar int8 can't reach: each embedding is compressed to
-    * M=8 per-subspace centroid codes (256 B → 8 codes, 32×) by the
-    * codegen `vec_pq_encode` kernel, and scoring is `vec_pq_adc` — M
-    * lookups into the query's exact dot-product table — so the scan
-    * never touches raw vectors. Codebook = sub-vectors of the first 16
+    * M=8 per-subspace centroid codes packed into one BIGINT by the
+    * codegen `vec_pq_encode_packed` kernel, and scoring is
+    * `vec_pq_adc_packed` — M lookups into the query's exact dot-product
+    * table, summed in ascending-subspace order — so the scan never
+    * touches raw vectors. Codebook = sub-vectors of the first 16
     * embeddings in id order (n04's iters=0 discipline: data-derivable,
     * so the DuckDB oracle re-derives codes, LUT, and scores bit-exactly
     * via unrolled left-associated arithmetic; Lloyd-refined codebooks
-    * and the persisted-artifact path are AnnPqSpec's PqIndex surface).
+    * and the persisted-artifact path are AnnPqSpec's and IvfPqSpec's
+    * [[graft.ann.IvfPqIndex]] surface).
     * Plan: one narrow projection over the scan + TakeOrderedAndProject,
     * zero shuffle. */
   /** Shared n06/n07 PQ setup. M=8 subspaces, K=16 centroids — constants
@@ -291,8 +296,9 @@ object AnnQueries {
     * decode kernel: per subspace it is the chosen centroid's squared
     * distance, the very quantity the encoder minimizes, so the audit
     * reuses the encode arithmetic (codes from the codegen
-    * `vec_pq_encode`; distances as left-assoc Double chains matching
-    * the oracle's term order exactly).
+    * `vec_pq_encode_packed`, subspace mm's code = `(code >>> 4·mm) & 15`
+    * at K=16; distances as left-assoc Double chains matching the
+    * oracle's term order exactly).
     *
     * Scale shape: one narrow codes+error scan (16-row codebook rides as
     * a literal), TakeOrdered top-20 — no shuffle, no join. */
@@ -302,9 +308,9 @@ object AnnQueries {
     val cbD = typedlit(flatCb.map(_.toDouble))
     val withCodes = Tables.embeddings(s, d)
       .select(col("vec_id"), col("embedding"),
-        VectorOps.pqEncode(col("embedding"), flatCb, PQ_M, PQ_K).as("codes"))
+        VectorOps.pqEncodePacked(col("embedding"), flatCb, PQ_M, PQ_K).as("code"))
     val err2 = (0 until PQ_M).map { mm =>
-      val code = expr(s"CAST(element_at(codes, ${mm + 1}) AS INT)")
+      val code = shiftrightunsigned(col("code"), mm * 4).bitwiseAND(15L).cast("int")
       (1 to 8).map { dd =>
         val e = expr(s"CAST(element_at(embedding, ${mm * 8 + dd}) AS DOUBLE)")
         val c = element_at(cbD, (lit(mm * PQ_K) + code) * lit(8) + lit(dd))
@@ -322,9 +328,9 @@ object AnnQueries {
     VectorOps.ensureRegistered(s)
     Tables.embeddings(s, d)
       .select(col("vec_id"),
-        (round(VectorOps.pqAdc(
-          VectorOps.pqEncode(col("embedding"), flatCb, PQ_M, PQ_K), lut, PQ_K), 4)
-          + lit(0.0)).as("score"))
+        (round(VectorOps.pqAdcPacked(
+          VectorOps.pqEncodePacked(col("embedding"), flatCb, PQ_M, PQ_K), lut,
+          PQ_M, PQ_K), 4) + lit(0.0)).as("score"))
       .orderBy(col("score").desc, col("vec_id").asc)
       .limit(10)
   }
@@ -365,9 +371,9 @@ object AnnQueries {
       .withColumn("cell", expr(cellCase))
       .filter(col("cell").isin(probed: _*))
       .select(col("vec_id"),
-        VectorOps.pqAdc(
-          VectorOps.pqEncode(col("embedding"), flatCb, PQ_M, PQ_K), lut, PQ_K)
-          .as("adc"))
+        VectorOps.pqAdcPacked(
+          VectorOps.pqEncodePacked(col("embedding"), flatCb, PQ_M, PQ_K), lut,
+          PQ_M, PQ_K).as("adc"))
       .orderBy(col("adc").desc, col("vec_id").asc)
       .limit(COARSE)
       .select(col("vec_id"))
@@ -392,10 +398,7 @@ object AnnQueries {
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
     val idx = graft.ann.IvfPqIndex.build(emb,
       cells = 8, ivfIters = 0, m = PQ_M, k = PQ_K, pqIters = 0)
-    // same stable per-(dataset, JVM) overwrite path as n04 (see comment
-    // there): within-process reuse, no cross-process aliasing
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft-n08-ivfpq-" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + s"-${ProcessHandle.current().pid()}"
+    val tmp = scratchDir("n08-ivfpq", d)
     idx.save(tmp)
     idx.codes.unpersist()
     val loaded = graft.ann.IvfPqIndex.load(s, tmp)
@@ -422,8 +425,7 @@ object AnnQueries {
     val idx = graft.ann.IvfPqIndex.build(emb,
       cells = 8, ivfIters = 0, m = PQ_M, k = PQ_K, pqIters = 0,
       metaCols = Seq("label"))
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft-n11-fivfpq-" +
-      d.replaceAll("[^A-Za-z0-9.]", "_") + s"-${ProcessHandle.current().pid()}"
+    val tmp = scratchDir("n11-fivfpq", d)
     idx.save(tmp)
     idx.codes.unpersist()
     val loaded = graft.ann.IvfPqIndex.load(s, tmp)
@@ -471,7 +473,7 @@ object AnnQueries {
     *  - `bits` still sizes from the MEMBER count (same ladder rung);
     *  - the hot-bucket cap censuses SUM(clone count), so the dropped
     *    (tbl, bucket) set is exactly the clone-expanded census's
-    *    ([[Lsh.capTieredBucketsWeighted]]);
+    *    ([[Lsh.capTieredBuckets]] weighted by clone count);
     *  - member pairs (x, y) are candidates iff their groups share a
     *    surviving bucket (clones occupy identical bucket sets), and a
     *    clone pair inside one group is a candidate iff the group has a
@@ -514,7 +516,7 @@ object AnnQueries {
     rawBucketed.count() // thin (gid, cnt, tbl, bucket) rows; both sides reuse
     // d06's hot-bucket cap (VERDICT r04 #1), weighted so the boundary is
     // the clone-expanded one; oracle twin = duckTieredCappedCtes
-    val bucketed = Lsh.capTieredBucketsWeighted(rawBucketed, col("cnt"))
+    val bucketed = Lsh.capTieredBuckets(rawBucketed, col("cnt"))
     // every node-sized build side below goes through Joins.small, sized
     // on n, so below its bound the candidate stream — the big side,
     // O(distinct·bucket) rows — never exchanges (the pre-r9 shape
@@ -735,17 +737,50 @@ object AnnQueries {
     * partition-pruned point read; batched query sets add query_id as
     * one more key to the same unrolled plan (n03's shape). */
   val n17_beam_search: Q = (s, d) => {
-    val q = VectorQueries.flagshipVec
     val edges = n09Graph(s, d)
+    flagshipWalk(s, d)(frontier => edges
+      .join(broadcast(frontier.select(col("vec_id").as("src"))), "src")
+      .select(col("nbr").as("vec_id")))
+  }
+
+  /** The fixed-budget walk every beam operator runs: [[BEAM_STEPS]]
+    * expansions from `entries`, unrolled as lazy plan stages. A beam row
+    * is keyed by `keys` (`vec_id`, or `qlabel, vec_id` for a query
+    * batch); `probe` maps a frontier to its out-neighbours under the same
+    * keys, `score` scores candidate keys, and `keep` cuts the candidates
+    * to the beam. Since r10 the beam CARRIES its scores between steps
+    * (the score is a pure function of the key under a fixed query, so
+    * rescoring the kept beam every step — and once more at the end —
+    * recomputed identical values): only NEW neighbour keys hit the corpus
+    * join, and the per-step dedup is a max-aggregate over equal values
+    * (value-identical to distinct-then-score). */
+  private def beamWalk(entries: DataFrame, keys: Seq[String])(
+      probe: DataFrame => DataFrame, score: DataFrame => DataFrame,
+      keep: DataFrame => DataFrame): DataFrame = {
+    val keyCols = keys.map(col)
+    var beam: DataFrame = null
+    for (step <- 1 to BEAM_STEPS) {
+      val frontier = if (step == 1) entries else beam.select(keyCols: _*)
+      val nbrs = probe(frontier)
+      val cand =
+        if (step == 1) score(frontier.unionByName(nbrs))
+        else beam.unionByName(score(nbrs))
+          .groupBy(keyCols: _*).agg(max(col("score")).as("score"))
+      beam = keep(cand)
+    }
+    beam
+  }
+
+  /** n17's walk for the flagship query over any neighbour `probe`
+    * (n17: the memoized edge artifact; n21: the loaded [[graft.ann
+    * .KnnGraph]]): entries are the [[BEAM_ENTRIES]] smallest ids, a
+    * candidate-id frame is scored by broadcasting it into the id-pruned
+    * corpus join (all lazy, nothing collects), and the beam is the
+    * global best [[BEAM_WIDTH]] by (score DESC, vec_id ASC). */
+  private def flagshipWalk(s: SparkSession, d: String)(
+      probe: DataFrame => DataFrame): DataFrame = {
+    val q = VectorQueries.flagshipVec
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    // score a (tiny) candidate-id frame — the id side broadcasts into the
-    // id-pruned corpus join; all lazy, nothing collects. Since r10 the
-    // beam CARRIES its scores between steps (the score is a pure function
-    // of vec_id under the fixed query, so rescoring the kept beam every
-    // step — and once more at the end — recomputed identical values):
-    // only NEW neighbor ids hit the corpus join, the per-step dedup is a
-    // max-aggregate over equal values (value-identical to
-    // distinct-then-score), and the final rescore pass is gone.
     def scored(ids: DataFrame): DataFrame = emb
       .join(broadcast(ids.distinct()), "vec_id")
       .select(col("vec_id"),
@@ -753,20 +788,9 @@ object AnnQueries {
           .as("score"))
     val entries = emb.select(col("vec_id"))
       .orderBy(col("vec_id").asc).limit(BEAM_ENTRIES)
-    var beam: DataFrame = null
-    for (step <- 1 to BEAM_STEPS) {
-      val frontier = if (step == 1) entries else beam.select(col("vec_id"))
-      val nbrs = edges
-        .join(broadcast(frontier.select(col("vec_id").as("src"))), "src")
-        .select(col("nbr").as("vec_id"))
-      val cand =
-        if (step == 1) scored(frontier.unionByName(nbrs))
-        else beam.unionByName(scored(nbrs))
-          .groupBy(col("vec_id")).agg(max(col("score")).as("score"))
-      beam = cand.orderBy(col("score").desc, col("vec_id").asc)
-        .limit(BEAM_WIDTH)
-    }
-    beam.orderBy(col("score").desc, col("vec_id").asc)
+    beamWalk(entries, Seq("vec_id"))(probe, scored,
+      _.orderBy(col("score").desc, col("vec_id").asc).limit(BEAM_WIDTH))
+      .orderBy(col("score").desc, col("vec_id").asc)
   }
 
   /** n20: BATCHED graph beam search — n17's fixed-budget walk with
@@ -791,11 +815,6 @@ object AnnQueries {
     val qs = qsDf(s, d) // (qlabel, qvec), broadcast
     val edges = n09Graph(s, d)
     val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    // n17's r10 score-carrying shape with qlabel as one more key: the
-    // per-query score is a pure function of (qlabel, vec_id), so the kept
-    // beam rides its scores between steps — only NEW (qlabel, nbr) pairs
-    // hit the corpus join, the dedup max-aggregate folds equal values,
-    // and the final rescore pass is gone.
     def scored(cand: DataFrame): DataFrame = emb
       .join(broadcast(cand.distinct()), "vec_id")
       .join(qs, "qlabel")
@@ -812,22 +831,12 @@ object AnnQueries {
     val entries = emb.select(col("vec_id"))
       .orderBy(col("vec_id").asc).limit(BEAM_ENTRIES)
       .select(explode(typedlit((0 to 9).toArray)).as("qlabel"), col("vec_id"))
-    var beam: DataFrame = null
-    for (step <- 1 to BEAM_STEPS) {
-      val frontier =
-        if (step == 1) entries else beam.select(col("qlabel"), col("vec_id"))
-      val nbrs = edges
+    beamWalk(entries, Seq("qlabel", "vec_id"))(
+      frontier => edges
         .join(broadcast(frontier.select(col("qlabel"), col("vec_id").as("src"))),
           "src")
-        .select(col("qlabel"), col("nbr").as("vec_id"))
-      val cand =
-        if (step == 1) scored(frontier.unionByName(nbrs))
-        else beam.unionByName(scored(nbrs))
-          .groupBy(col("qlabel"), col("vec_id"))
-          .agg(max(col("score")).as("score"))
-      beam = topPerQuery(cand)
-    }
-    beam
+        .select(col("qlabel"), col("nbr").as("vec_id")),
+      scored, topPerQuery)
       .selectExpr("CAST(qlabel AS BIGINT) AS qlabel", "vec_id", "score")
       .orderBy(col("qlabel"), col("score").desc, col("vec_id").asc)
   }
@@ -844,37 +853,11 @@ object AnnQueries {
     * Same walk, same oracle as n17 — what's under test is that the
     * STORAGE round-trip and the pruned probe path change nothing. */
   val n21_graph_artifact: Q = (s, d) => {
-    val q = VectorQueries.flagshipVec
-    // stable per-dataset path + overwrite save (n04's rationale; no pid
-    // suffix — repeated runs overwrite ONE directory instead of
-    // accumulating an orphan per JVM, VERDICT r07 wrong-#4)
-    val tmp = s"${System.getProperty("java.io.tmpdir")}/graft-n21-knn-" +
-      d.replaceAll("[^A-Za-z0-9.]", "_")
+    val tmp = scratchDir("n21-knn", d)
     graft.ann.KnnGraph.save(n09Graph(s, d), tmp)
     val g = graft.ann.KnnGraph.load(s, tmp)
-    val emb = Tables.embeddings(s, d).select(col("vec_id"), col("embedding"))
-    // n17's r10 score-carrying walk over the loaded artifact (same
-    // rationale: scores are a pure function of vec_id, so the kept beam
-    // rides them between steps and the final rescore pass is gone)
-    def scored(ids: DataFrame): DataFrame = emb
-      .join(broadcast(ids.distinct()), "vec_id")
-      .select(col("vec_id"),
-        (round(VectorOps.dotQueryNative(col("embedding"), q), 4) + lit(0.0))
-          .as("score"))
-    val entries = emb.select(col("vec_id"))
-      .orderBy(col("vec_id").asc).limit(BEAM_ENTRIES)
-    var beam: DataFrame = null
-    for (step <- 1 to BEAM_STEPS) {
-      val frontier = if (step == 1) entries else beam.select(col("vec_id"))
-      val nbrs = g.neighbors(frontier).select(col("nbr").as("vec_id"))
-      val cand =
-        if (step == 1) scored(frontier.unionByName(nbrs))
-        else beam.unionByName(scored(nbrs))
-          .groupBy(col("vec_id")).agg(max(col("score")).as("score"))
-      beam = cand.orderBy(col("score").desc, col("vec_id").asc)
-        .limit(BEAM_WIDTH)
-    }
-    beam.orderBy(col("score").desc, col("vec_id").asc)
+    flagshipWalk(s, d)(frontier =>
+      g.neighbors(frontier).select(col("nbr").as("vec_id")))
   }
 
   /** n18: MULTIPROBE LSH top-k — n02's bucketed scan widened to the

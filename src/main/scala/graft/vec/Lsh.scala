@@ -89,29 +89,15 @@ object Lsh {
     * census is counted (a tiny cached table) and every drop is logged —
     * rows in a dropped (tbl, bucket) keep their candidates from the
     * other L−1 tables, and identical-copy clusters are d01 exact
-    * dedup's job, not the near-dup join's. */
-  def capTieredBuckets(bucketed: DataFrame, cap: Long = TIER_BUCKET_CAP): DataFrame = {
-    val hot = bucketed.groupBy(col("tbl"), col("bucket"))
-      .agg(count(lit(1)).as("bsz"))
-      .filter(col("bsz") > cap)
-      .select(col("tbl"), col("bucket"))
-      .cache()
-    val nHot = hot.count()
-    if (nHot > 0) log.warn(
-      s"capTieredBuckets: dropping $nHot (tbl, bucket) group(s) over cap=$cap " +
-        "(degenerate collision cluster — near-dup recall for those rows now " +
-        "rests on their other tables; identical copies are d01's job)")
-    bucketed.join(hot, Seq("tbl", "bucket"), "left_anti")
-  }
-
-  /** [[capTieredBuckets]] over DISTINCT-vector rows carrying a clone
-    * count: the census weighs each row by `weight` (sum, not count), so
-    * the dropped (tbl, bucket) set is IDENTICAL to what the unweighted
-    * census over the clone-expanded rows would drop — the invariant that
-    * lets n09 collapse exact-clone vectors before its candidate join
-    * (VERDICT r08 next-#2) without moving a single capped-bucket
-    * boundary. */
-  def capTieredBucketsWeighted(bucketed: DataFrame, weight: Column,
+    * dedup's job, not the near-dup join's.
+    *
+    * `weight` is each row's multiplicity in the census (1 by default).
+    * Over DISTINCT-vector rows carrying a clone count, summing that count
+    * drops the SAME (tbl, bucket) set the unweighted census over the
+    * clone-expanded rows would drop — the invariant that lets n09
+    * collapse exact-clone vectors before its candidate join (VERDICT r08
+    * next-#2) without moving a single capped-bucket boundary. */
+  def capTieredBuckets(bucketed: DataFrame, weight: Column = lit(1L),
       cap: Long = TIER_BUCKET_CAP): DataFrame = {
     val hot = bucketed.groupBy(col("tbl"), col("bucket"))
       .agg(sum(weight).as("bsz"))
@@ -120,9 +106,9 @@ object Lsh {
       .cache()
     val nHot = hot.count()
     if (nHot > 0) log.warn(
-      s"capTieredBucketsWeighted: dropping $nHot (tbl, bucket) group(s) over " +
-        s"cap=$cap (weighted by clone count — same boundary as the " +
-        "clone-expanded census)")
+      s"capTieredBuckets: dropping $nHot (tbl, bucket) group(s) over cap=$cap " +
+        "(degenerate collision cluster — near-dup recall for those rows now " +
+        "rests on their other tables; identical copies are d01's job)")
     bucketed.join(hot, Seq("tbl", "bucket"), "left_anti")
   }
 

@@ -224,18 +224,11 @@ object VectorOps {
   def encodeVec(a: Column): Column = call_function("vec_encode", a)
   def decodeVec(a: Column): Column = call_function("vec_decode", a)
 
-  /** Product-quantization kernels (vec_pq_encode / vec_pq_adc — the
-    * `graft.ann.PqIndex` + n06 path). The flat codebook is laid out
-    * `[(mm·k + j)·sub + dd]`; the LUT `[mm·k + j]`. */
-  def pqEncode(v: Column, flatCb: Array[Float], m: Int, k: Int): Column =
-    call_function("vec_pq_encode", v, typedlit(flatCb),
-      org.apache.spark.sql.functions.lit(m), org.apache.spark.sql.functions.lit(k))
-  def pqAdc(codes: Column, flatLut: Array[Double], k: Int): Column =
-    call_function("vec_pq_adc", codes, typedlit(flatLut),
-      org.apache.spark.sql.functions.lit(k))
-
-  /** Packed PQ kernels: all m codes in one BIGINT (8 B/row storage —
-    * the PqIndex artifact form). */
+  /** Product-quantization kernels (vec_pq_encode_packed /
+    * vec_pq_adc_packed): all m codes in one BIGINT, 8 B/row — the
+    * `graft.ann.IvfPqIndex` artifact form and the n06/n07/n15 path. The
+    * flat codebook is laid out `[(mm·k + j)·sub + dd]`; the LUT
+    * `[mm·k + j]`. */
   def pqEncodePacked(v: Column, flatCb: Array[Float], m: Int, k: Int): Column =
     call_function("vec_pq_encode_packed", v, typedlit(flatCb),
       org.apache.spark.sql.functions.lit(m), org.apache.spark.sql.functions.lit(k))

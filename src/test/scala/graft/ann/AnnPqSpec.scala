@@ -5,10 +5,16 @@ import graft.ops.VectorQueries
 import graft.vec.VectorOps
 import org.apache.spark.sql.functions._
 
+/** Product quantization on its one artifact: an [[IvfPqIndex]] with a
+  * single cell is a plain codes-only PQ index (every row in cell 0,
+  * `searchAdc(q, k, nprobe = 1)` the full ADC scan). */
 class AnnPqSpec extends SparkSpec {
 
   private lazy val emb = spark.read.parquet(s"$sf/embeddings.parquet")
   private val q = VectorQueries.flagshipVec
+
+  private def pq(m: Int, iters: Int): IvfPqIndex =
+    IvfPqIndex.build(emb, cells = 1, ivfIters = 0, m = m, k = 16, pqIters = iters)
 
   private def refEncode(v: Array[Float], flat: Array[Float],
       m: Int, k: Int): Array[Int] = {
@@ -36,11 +42,11 @@ class AnnPqSpec extends SparkSpec {
     // derive bits = ceil(log2 k) exactly as VecPqEncodePacked does, so a
     // future k change can't silently desync the unpack below
     val bits = 32 - Integer.numberOfLeadingZeros(k - 1)
-    val idx = PqIndex.build(emb, m = m, k = k, iters = 3)
+    val idx = pq(m, iters = 3)
     val vecs = emb.orderBy(col("vec_id"))
       .select(col("vec_id"), col("embedding"))
       .as[(Long, Array[Float])].collect()
-    val lut = idx.lutOf(q)
+    val lut = PqIndex.lut(idx.flatCodebook, m, k, q)
     val got = idx.codes
       .select(col("vec_id"), col("code"),
         VectorOps.pqAdcPacked(col("code"), lut, m, k).as("adc"))
@@ -56,31 +62,27 @@ class AnnPqSpec extends SparkSpec {
       val wantAdc = want.zipWithIndex
         .foldLeft(0.0) { case (acc, (c, mm)) => acc + lut(mm * k + c) }
       assert(r.getDouble(2) == wantAdc, s"adc for vec $id") // bit-exact
+      // and the driver twin the RAM-coarse serving regime scores with
+      assert(PqIndex.adcPacked(word, lut, m, k) == wantAdc, s"driver adc for vec $id")
     }
   }
 
-  test("build is deterministic, and the packed word agrees nibble-for-" +
-    "nibble with the unpacked vec_pq_encode in one projection") {
-    val m = 8; val k = 16
-    val bits = 32 - Integer.numberOfLeadingZeros(k - 1)
-    val a = PqIndex.build(emb, m = m, k = k, iters = 3)
-    val b = PqIndex.build(emb, m = m, k = k, iters = 3)
+  test("train is deterministic: two builds give bitwise-equal codebooks " +
+    "and identical packed codes") {
+    val a = pq(8, iters = 3)
+    val b = pq(8, iters = 3)
     // training is entirely driver-side sequential arithmetic over a
     // deterministic sample — bitwise equality, unlike the distributed
     // vecSum caveat IvfIndex documents
     assert(a.flatCodebook.sameElements(b.flatCodebook))
-    // packed and array kernels side by side (also exercises the
-    // freshName discipline: two 3-level generated loops in one function)
-    val mismatches = emb
-      .select(
-        VectorOps.pqEncodePacked(col("embedding"), a.flatCodebook, m, k).as("w"),
-        VectorOps.pqEncode(col("embedding"), a.flatCodebook, m, k).as("cs"))
-      .filter(expr(
-        s"aggregate(zip_with(cs, sequence(0, ${m - 1})," +
-          s" (c, i) -> shiftleft(CAST(c AS BIGINT), $bits * i)), 0L," +
-          " (acc, x) -> acc + x) != w"))
+    assert(a.flatCodebook.sameElements(
+      PqIndex.train(emb, m = 8, k = 16, iters = 3)))
+    val differing = a.codes.select(col("vec_id"), col("code").as("ca"))
+      .join(b.codes.select(col("vec_id"), col("code").as("cb")), "vec_id")
+      .filter(col("ca") =!= col("cb"))
       .count()
-    assert(mismatches == 0)
+    assert(differing == 0)
+    assert(a.codes.count() == emb.count())
   }
 
   test("trained ADC ranking: direct recall@10 >= 0.4 and the exact " +
@@ -96,8 +98,8 @@ class AnnPqSpec extends SparkSpec {
         round(VectorOps.dotQueryNative(col("embedding"), q), 4).as("score"))
       .orderBy(col("score").desc, col("vec_id").asc).limit(10)
       .select(col("vec_id")).collect().map(_.getLong(0)).toSet
-    val trained = PqIndex.build(emb, m = 16, k = 16, iters = 5)
-    val adc100 = trained.search(q, 100).collect().map(_.getLong(0))
+    val trained = pq(16, iters = 5)
+    val adc100 = trained.searchAdc(q, 100, nprobe = 1).collect().map(_.getLong(0))
     val recall10 = adc100.take(10).count(exact).toDouble / 10.0
     val inTop100 = adc100.count(exact).toDouble / 10.0
     assert(recall10 >= 0.4, s"direct ADC recall@10 = $recall10")
@@ -106,24 +108,31 @@ class AnnPqSpec extends SparkSpec {
 
   test("save/load round-trips: the reloaded artifact returns the " +
     "identical top-10 (ids and scores)") {
-    val idx = PqIndex.build(emb, m = 8, k = 16, iters = 3)
+    val idx = pq(8, iters = 3)
     val tmp = java.nio.file.Files.createTempDirectory("graft-pq").toString
     idx.save(tmp)
+    def top10(ix: IvfPqIndex) = ix.searchAdc(q, 10, nprobe = 1).collect()
+      .map(r => (r.getLong(0), r.getDouble(1)))
+    val a = top10(idx)
     idx.codes.unpersist()
-    val loaded = PqIndex.load(spark, tmp)
+    val loaded = IvfPqIndex.load(spark, tmp)
     assert(loaded.m == idx.m && loaded.k == idx.k &&
       loaded.flatCodebook.sameElements(idx.flatCodebook))
-    val a = idx.search(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    val b = loaded.search(q, 10).collect().map(r => (r.getLong(0), r.getDouble(1)))
-    assert(a.sameElements(b))
+    val b = top10(loaded)
+    assert(a.length == 10 && a.sameElements(b))
   }
 
   test("ADC search plan: one narrow codes scan + TakeOrderedAndProject, " +
     "zero Exchange (the 100 TB codes-only scan shape)") {
-    val idx = PqIndex.build(emb, m = 8, k = 16, iters = 1)
-    val p = idx.search(q, 10).queryExecution.executedPlan.toString
+    val idx = pq(8, iters = 1)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-pq-plan").toString
+    idx.save(tmp)
+    idx.codes.unpersist()
+    val p = IvfPqIndex.load(spark, tmp).searchAdc(q, 10, nprobe = 1)
+      .queryExecution.executedPlan.toString
     assert(p.contains("TakeOrderedAndProject"), p)
     assert(!p.contains("Exchange"), p)
     assert(!p.contains("ScalaUDF"), p)
+    assert(!p.contains("embedding"), s"the ADC scan must read codes only:\n$p")
   }
 }

@@ -309,4 +309,110 @@ class VectorExpressionsSpec extends SparkSpec {
       .collect().map(_.getLong(0)).toSeq
     assert(viaSql == want)
   }
+
+  // The packed PQ kernels' guards, each checked on BOTH evaluation paths:
+  // `eval` (nullSafeEval) and the generated code, which
+  // GenerateUnsafeProjection compiles without an interpreted fallback.
+  private object PqGuards {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, LongType}
+
+    val floats = ArrayType(FloatType, containsNull = true)
+    def vecRef(i: Int) = BoundReference(i, floats, nullable = false)
+    val wordRef = BoundReference(0, LongType, nullable = false)
+    val lutRef = BoundReference(1, ArrayType(DoubleType, containsNull = false), nullable = false)
+    def floatArr(xs: Seq[java.lang.Float]) = new GenericArrayData(xs.toArray[Any])
+    def doubleArr(xs: Seq[Double]) = new GenericArrayData(xs.toArray[Any])
+
+    /** The generated-code path, compiled without an interpreted fallback. */
+    def codegen(e: Expression) = GenerateUnsafeProjection.generate(Seq(e))
+
+    /** The message each path throws for `row`, which must be an
+      * IllegalArgumentException on both. */
+    def failures(e: Expression, row: InternalRow): Seq[String] = {
+      val interp = intercept[IllegalArgumentException](e.eval(row))
+      val gen = intercept[IllegalArgumentException](codegen(e)(row))
+      Seq(interp.getMessage, gen.getMessage)
+    }
+
+    // m = 2 subspaces of 2 dims, k = 2 centroids: 8 codebook floats
+    val cb = floatArr(Seq.tabulate(8)(i => java.lang.Float.valueOf(i.toFloat)))
+  }
+
+  test("vec_pq_encode_packed fails loudly on a dims mismatch, interpreted " +
+    "and codegen") {
+    import PqGuards._
+    import org.apache.spark.sql.catalyst.InternalRow
+    val e = VectorExpressions.VecPqEncodePacked(vecRef(0), vecRef(1), 2, 2)
+    Seq(3, 5).foreach { n =>
+      val row = InternalRow(floatArr(Seq.fill(n)(java.lang.Float.valueOf(1f))), cb)
+      failures(e, row).foreach(msg => assert(msg.contains(
+        s"vec_pq_encode_packed: vector has $n dims, codebook expects exactly 4"), msg))
+    }
+    // the well-formed row encodes on both paths alike
+    val ok = InternalRow(floatArr(Seq[java.lang.Float](0f, 1f, 6f, 7f)), cb)
+    val want = 0L | (1L << 1) // subspace 0 -> centroid 0, subspace 1 -> centroid 1
+    assert(e.eval(ok) == want)
+    assert(codegen(e)(ok).getLong(0) == want)
+  }
+
+  test("vec_pq_encode_packed fails loudly on a null element, interpreted " +
+    "and codegen") {
+    import PqGuards._
+    import org.apache.spark.sql.catalyst.InternalRow
+    val e = VectorExpressions.VecPqEncodePacked(vecRef(0), vecRef(1), 2, 2)
+    val row = InternalRow(floatArr(Seq[java.lang.Float](1f, 2f, null, 4f)), cb)
+    failures(e, row).foreach(msg =>
+      assert(msg.contains("vec_pq_encode_packed: null element at index 2"), msg))
+  }
+
+  test("vec_pq_adc_packed fails loudly on an out-of-range code, " +
+    "interpreted and codegen") {
+    import PqGuards._
+    import org.apache.spark.sql.catalyst.InternalRow
+    // k = 10 leaves nibble values 10..15 unused: code 12 in subspace 0
+    // indexes inside the LUT (subspace 1's entry), so only the k bound
+    // catches it
+    val e10 = VectorExpressions.VecPqAdcPacked(wordRef, lutRef, 2, 10)
+    val row10 = InternalRow(12L | (3L << 4), doubleArr(Seq.tabulate(20)(_.toDouble)))
+    failures(e10, row10).foreach(msg => assert(msg.contains(
+      "vec_pq_adc_packed: code 12 at subspace 0 out of range (k=10)"), msg))
+    // a LUT shorter than m·k: subspace 1's entries are missing
+    val e16 = VectorExpressions.VecPqAdcPacked(wordRef, lutRef, 2, 16)
+    val row16 = InternalRow(5L | (1L << 4), doubleArr(Seq.tabulate(16)(_.toDouble)))
+    failures(e16, row16).foreach(msg => assert(msg.contains(
+      "vec_pq_adc_packed: code 1 at subspace 1 out of range (k=16)"), msg))
+    // in range: lut(0·10 + 3) + lut(1·10 + 7)
+    val ok = InternalRow(3L | (7L << 4), doubleArr(Seq.tabulate(20)(_.toDouble)))
+    assert(e10.eval(ok) == 20.0)
+    assert(codegen(e10)(ok).getDouble(0) == 20.0)
+  }
+
+  test("packed PQ kernels reject m·bits > 64 at construction, directly " +
+    "and through the SQL function registry") {
+    import PqGuards._
+    val enc = intercept[IllegalArgumentException](
+      VectorExpressions.VecPqEncodePacked(vecRef(0), vecRef(1), 17, 16))
+    assert(enc.getMessage.contains(
+      "vec_pq_encode_packed: m=17 codes of 4 bits exceed one BIGINT"), enc.getMessage)
+    val adc = intercept[IllegalArgumentException](
+      VectorExpressions.VecPqAdcPacked(wordRef, lutRef, 9, 256))
+    assert(adc.getMessage.contains(
+      "vec_pq_adc_packed: m=9 codes of 8 bits exceed one BIGINT"), adc.getMessage)
+    // m = 16, k = 16 is exactly 64 bits and builds
+    VectorExpressions.VecPqEncodePacked(vecRef(0), vecRef(1), 16, 16)
+    VectorExpressions.VecPqAdcPacked(wordRef, lutRef, 16, 16)
+    import spark.implicits._
+    def causes(t: Throwable): Seq[Throwable] =
+      if (t == null) Nil else t +: causes(t.getCause)
+    val viaSql = intercept[Exception](
+      Seq(Tuple1(Array.fill(68)(1f))).toDF("v")
+        .select(VectorOps.pqEncodePacked(col("v"), Array.fill(17 * 16 * 4)(0f), 17, 16))
+        .collect())
+    assert(causes(viaSql).exists(c => c.getMessage != null &&
+      c.getMessage.contains("exceed one BIGINT")), viaSql)
+  }
 }
